@@ -933,14 +933,14 @@ def boryear_decode(spark, sf_dir):
 # dialects) runs via spark.sql over registered views.
 # ===========================================================================
 
-from map_spark_sql_spark.sources.readers import register_views as _register_views
+from map_spark_sql_spark.sources.readers import register_views as _register_views, tables_in
 
 
 def _shared_sql(name: str, sql: str, doc: str):
     """Register a query whose text is valid in BOTH dialects verbatim."""
 
-    def fn(spark, sf_dir, _sql=sql):
-        _register_views(spark, sf_dir)
+    def fn(spark, sf_dir, _sql=sql, _names=tables_in(sql)):
+        _register_views(spark, sf_dir, _names)
         return spark.sql(_sql)
 
     fn.__name__ = name
@@ -1719,7 +1719,7 @@ FROM orders GROUP BY o_orderpriority
 def orders_price_percentiles(spark, sf_dir):
     """Exact interpolated percentiles (Spark `percentile` == DuckDB
     `quantile_cont`); the ordered-aggregate family."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("orders",))
     return spark.sql(
         f"""
 SELECT o_orderpriority,
@@ -2155,7 +2155,7 @@ def text_quality_gate_p25(spark, sf_dir):
     both engines). Scale shape: the per-source cut table is tiny and
     broadcasts; the corpus scans once for counting and once for the gated
     output — or fuses into one pass when `counted` is materialized."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("documents",))
     return spark.sql(_quality_gate_sql("spark"))
 
 
@@ -2547,7 +2547,7 @@ LIMIT 10
 @q("similarity_topk_bruteforce", _sim_query_sql("duckdb"))
 def similarity_topk_bruteforce(spark, sf_dir):
     """Brute-force cosine top-10 (TakeOrderedAndProject; per-partition heaps)."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("embeddings",))
     return spark.sql(_sim_query_sql("spark"))
 
 
@@ -2563,7 +2563,7 @@ def retrieval_hybrid_rrf(spark, sf_dir):
     from pyspark.sql import Window
 
     lex = TX.bm25_topk(load_table(spark, sf_dir, "documents"), _BM25_TERMS, k=50)
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("embeddings",))
     dense = spark.sql(_sim_query_sql("spark")).withColumn(
         "rank",
         F.row_number().over(Window.orderBy(F.desc("sim"), F.asc("vec_id"))),
@@ -4156,7 +4156,6 @@ def similarity_ppr_seed_expand(spark, sf_dir):
     edge builder, and one-shuffle-per-round shape as
     similarity_pagerank_central; the seed flag adds one left join on the
     vertex table."""
-    _register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     edges = SIM.quantized_knn_edges(emb, k=3)
     seeds = emb.filter(F.col("label") == 0).select("vec_id")
@@ -4176,7 +4175,6 @@ def similarity_triangle_density(spark, sf_dir):
     from chance LSH collisions — a band false positive rarely closes a
     triangle. Orientation by (degree, id) bounds wedge fan-out by the
     O(sqrt(E)) out-degree, so hub vertices cannot blow up the join."""
-    _register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     edges = SIM.quantized_knn_edges(emb, k=3)
     return G.triangle_counts(edges, id_col="vec_id")
@@ -4384,7 +4382,6 @@ def similarity_pagerank_central(spark, sf_dir):
     the same recurrence into five CTE stages. Scale: edge build swaps to
     the LSH kNN graph (documented in quantized_knn_edges_sql); each
     iteration is one shuffle keyed on well-distributed vec_ids."""
-    _register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     edges = SIM.quantized_knn_edges(emb, k=3)
     return G.pagerank(edges, iters=5, id_col="vec_id")
@@ -4461,7 +4458,6 @@ def similarity_kcore(spark, sf_dir):
     off. One partial-aggregable degree agg + two anti-joins against the
     failing set per round, all keyed on vertex id; fixed round count
     mirrored exactly by the unrolled-CTE oracle."""
-    _register_views(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     edges = SIM.quantized_knn_edges(emb, k=3)
     return G.kcore(edges, k=3, rounds=6, id_col="vec_id")
@@ -4577,7 +4573,7 @@ def part_corr_qty_price(spark, sf_dir):
     one-pass parallel moments shape (no per-group sort, no window, no
     second scan), which is why this beats calling corr() twice at scale:
     every statistic shares the single aggregation."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("part", "lineitem"))
     return spark.sql(_CORR_STATS_SQL)
 
 
@@ -4618,7 +4614,7 @@ def events_mad_outliers(spark, sf_dir):
     at 100 TB swap approx_percentile(value, 0.5, 10000) or the GK sketch
     (operators/sketches.py) into the same frame, the plumbing is
     unchanged."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("events",))
     return spark.sql(_mad_outliers_sql("percentile"))
 
 
@@ -4809,7 +4805,7 @@ def docs_source_drift_psi(spark, sf_dir):
     hits contributes no term (the ε-free convention, identical on both
     engines). The ln runs on identical doubles from exact integer counts,
     and round-6 absorbs libm's 1-ulp latitude."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("documents",))
     return spark.sql(_psi_sql("spark"))
 
 
@@ -4851,7 +4847,7 @@ def customers_er_resolve(spark, sf_dir):
     path its hash gate. The blocking join is per-block hash work, CC is
     per-round single shuffles, and the size join is a broadcast of the
     cluster-count table."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("customer",))
     pairs = spark.sql(
         """
 SELECT a.c_custkey AS a_id, b.c_custkey AS b_id
@@ -5056,7 +5052,7 @@ def events_median_exact_hist(spark, sf_dir):
     histogram row would sort NULLS FIRST into Spark's cumulative window
     but NULLS LAST into DuckDB's, shifting every cum count — caught live
     at the 100x rung, where the adversarial feed has NULL values."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("events",))
     return spark.sql(_median_hist_sql("spark"))
 
 
@@ -5178,7 +5174,7 @@ def events_winsorize_p01_p99(spark, sf_dir):
     every downstream comparison and sum is order-free int64; the clip
     pass is one broadcast join of the |types|-row bound table back onto
     the facts."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("events",))
     return spark.sql(_winsorize_sql("percentile", "spark"))
 
 
@@ -5258,7 +5254,7 @@ def events_cusum_daily(spark, sf_dir):
     value is exact int64; a sustained rate shift makes cusum_scaled grow
     linearly, and thresholding it is the caller's policy choice (the full
     statistic surface is emitted, no silent cutoff)."""
-    _register_views(spark, sf_dir)
+    _register_views(spark, sf_dir, ("events",))
     return spark.sql(_cusum_sql("spark"))
 
 

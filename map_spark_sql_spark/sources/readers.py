@@ -7,22 +7,25 @@ be read multiple times" (``MapBuilder.java:129-133``). Our sources are the
 driver's parquet tables; the same scan-adapter role here is normalizing
 physical types so downstream plans are engine-portable.
 
-Nanosecond timestamps: the driver's parquet files carry
-``TIMESTAMP(NANOS)``, which Spark's vectorized reader rejects
-(PARQUET_TYPE_ILLEGAL) unless ``spark.sql.legacy.parquet.nanosAsLong`` is on.
-We enable that flag and rebuild proper ``timestamp`` columns with
+The read schema comes from the parquet footer, so a load launches no
+Spark inference job. Nanosecond timestamps: ``TIMESTAMP(NANOS)`` columns,
+which Spark's schema inference rejects (PARQUET_TYPE_ILLEGAL), are read as
+raw ``long`` epoch-nanos through that schema and rebuilt with
 ``timestamp_micros(ns div 1000)`` — the same truncation DuckDB applies when it
 reads TIMESTAMP_NS into its microsecond-resolution TIMESTAMP, so oracle
-comparisons agree exactly.
+comparisons agree exactly. No session-global flag is involved.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 TABLE_NAMES = (
     "region",
@@ -38,34 +41,31 @@ TABLE_NAMES = (
 )
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS), via pyarrow footer read."""
-    schema = pq.read_schema(path)
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return out
+def tables_in(sql: str) -> tuple[str, ...]:
+    """The driver tables ``sql`` names: a case-insensitive whole-word match
+    of ``TABLE_NAMES``. Over-matching only costs a footer read; a missed
+    table fails analysis."""
+    return tuple(n for n in TABLE_NAMES if re.search(rf"\b{n}\b", sql, re.IGNORECASE))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver table, normalizing timestamps to session-TZ ``timestamp``.
 
-    Two physical variants appear in driver testdata depending on how it was
-    written: TIMESTAMP(NANOS) (rejected by the vectorized reader without the
-    nanosAsLong flag; rebuilt via ``timestamp_micros(ns div 1000)``) and
-    TIMESTAMP(MICROS, isAdjustedToUTC=false) (read as TIMESTAMP_NTZ since
-    Spark 3.4's inferTimestampNTZ). Both are folded to plain ``timestamp`` so
-    every downstream plan — batch, streaming schema contracts, unix_micros
-    arithmetic — sees one type. The session TZ is UTC (session.py), so the
-    NTZ→LTZ cast is wall-clock-preserving and matches DuckDB's naive read.
+    The schema is the footer's (no inference job; a footer type with no
+    Spark equivalent raises). Two physical variants appear in driver testdata
+    depending on how it was written: TIMESTAMP(NANOS) (read as ``long``;
+    rebuilt via ``timestamp_micros(ns div 1000)``) and TIMESTAMP(MICROS,
+    isAdjustedToUTC=false) (read as TIMESTAMP_NTZ, as Spark 3.4's
+    inferTimestampNTZ would). Both are folded to plain ``timestamp`` so every
+    downstream plan — batch, streaming schema contracts, unix_micros
+    arithmetic — sees one type. The session TZ is UTC (session.py), so the NTZ→LTZ cast is
+    wall-clock-preserving and matches DuckDB's naive read.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    footer = pq.read_schema(path)
+    ns_cols = [f.name for f in footer if str(f.type).startswith("timestamp[ns")]
+    footer = pa.schema([f.with_type(pa.int64()) if f.name in ns_cols else f for f in footer])
+    df = spark.read.schema(from_arrow_schema(footer, prefer_timestamp_ntz=True)).parquet(path)
     for c in ns_cols:
         # integer `div` (not `/`): epoch-nanos exceed double's 2^53 exact range
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
@@ -162,12 +162,10 @@ def read_avro_legacy(spark: SparkSession, path: str, schema: str | None = None) 
     return spark.createDataFrame(records.map(lambda d: Row(**d)))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> None:
+def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> None:
     """Temp-view registration for staged SQL (S6, ``createOrReplaceTempView``
-    usage at ``PointMapBuilder.java:72``, ``TileMapBuilder.java:127-156``)."""
+    usage at ``PointMapBuilder.java:72``, ``TileMapBuilder.java:127-156``).
+    Registers exactly ``names`` (see :func:`tables_in`), each through
+    :func:`load_table`; a view left from another ``sf_dir`` is replaced."""
     for n in names:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -46,8 +46,8 @@ EVENT_SCHEMA = StructType(
 
 
 def _ts_is_nanos(path: str) -> bool:
-    """True when the parquet feed's ``ts`` column is timestamp[ns] (which the
-    Spark vectorized reader rejects without the nanosAsLong legacy flag).
+    """True when the parquet feed's ``ts`` column is timestamp[ns] (which
+    Spark only reads through an explicit ``long`` schema).
     Mirrors sources/readers.py's per-file detection so the stream reader
     tracks whatever precision the ingest actually writes."""
     import pyarrow.parquet as pq
@@ -78,7 +78,8 @@ def read_event_stream(
 ) -> DataFrame:
     """File-source event stream. Streaming sources need an explicit schema
     (no inference), and the nanos-timestamp normalization of
-    sources/readers.py applies here too via the legacy flag + rebuild.
+    sources/readers.py applies here too: ``ts`` is read as ``long`` and
+    rebuilt.
     ``nanos`` defaults to sniffing the feed's parquet footer; pass a bool to
     pin the behavior (e.g. a directory whose first files aren't ns but later
     ones are). ``max_files_per_trigger`` chops a multi-file feed into real
@@ -102,7 +103,6 @@ def read_event_stream(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     if not nanos:
         return reader.schema(EVENT_SCHEMA).parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = StructType(
         [f if f.name != "ts" else StructField("ts", LongType()) for f in EVENT_SCHEMA]
     )

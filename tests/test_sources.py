@@ -7,8 +7,9 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
-from map_spark_sql_spark.sources.readers import load_table, read_source
+from map_spark_sql_spark.sources.readers import TABLE_NAMES, load_table, read_source, tables_in
 from map_spark_sql_spark.sources.writers import write_salted_sorted
 from map_spark_sql_spark.functions.keys import salted_key
 
@@ -269,3 +270,90 @@ class TestTableMaterialization:
             assert spark.table("t_region_mat").count() == src.count()
         finally:
             spark.sql("DROP TABLE IF EXISTS t_region_mat")
+
+
+NANOS_FLAG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+class TestFooterSchemaLoad:
+    @pytest.mark.parametrize("name", TABLE_NAMES)
+    def test_load_launches_no_job_and_keeps_schema(self, spark, name):
+        """The footer-built schema equals what Spark inference plus the
+        NTZ->timestamp normalization gives, and taking it runs no job."""
+        inferred = spark.read.parquet(f"{SF_DIR}/{name}.parquet")
+        want = StructType(
+            [
+                StructField(f.name, TimestampType(), f.nullable)
+                if isinstance(f.dataType, TimestampNTZType)
+                else f
+                for f in inferred.schema
+            ]
+        )
+        tracker = spark.sparkContext.statusTracker()
+        jobs_before = set(tracker.getJobIdsForGroup())
+        assert load_table(spark, SF_DIR, name).schema == want
+        assert set(tracker.getJobIdsForGroup()) - jobs_before == set()
+
+    def test_nanos_timestamps_match_duckdb(self, spark, tmp_path):
+        """TIMESTAMP(NANOS) columns (no fixed table has one) read through
+        both the batch loader and the event stream equal DuckDB's read, and
+        neither sets the session-global nanosAsLong flag."""
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from map_spark_sql_spark.streaming.events import read_event_stream, run_to_memory
+
+        ns = [1_700_000_000_123_456_789, 1_700_000_060_000_000_999, None, 1_600_000_000_000_000_001]
+        n = len(ns)
+        table = pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+                "user_id": pa.array([7] * n, pa.int64()),
+                "event_type": pa.array(["view"] * n),
+                "value": pa.array([1.5] * n),
+                "props": pa.array(["{}"] * n),
+            }
+        )
+        path = str(tmp_path / "events.parquet")
+        pq.write_table(table, path)
+        assert str(pq.read_schema(path).field("ts").type) == "timestamp[ns]"
+
+        want = sorted(
+            duckdb.sql(
+                f"SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) FROM read_parquet('{path}')"
+            ).fetchall()
+        )
+        assert spark.conf.get(NANOS_FLAG, None) is None
+        batch = load_table(spark, str(tmp_path), "events")
+        assert batch.schema["ts"].dataType == TimestampType()
+        got = batch.select("event_id", F.unix_micros("ts")).collect()
+        assert sorted(tuple(r) for r in got) == want
+        stream = read_event_stream(spark, path, nanos=True)
+        streamed = run_to_memory(
+            stream.select("event_id", F.unix_micros("ts").alias("ts_us")),
+            "nanos_ts_stream",
+            output_mode="append",
+        ).collect()
+        assert sorted(tuple(r) for r in streamed) == want
+        assert spark.conf.get(NANOS_FLAG, None) is None
+
+
+class TestRegisteredViews:
+    def test_tables_in_whole_word_case_insensitive(self):
+        assert tables_in("SELECT n_events FROM EVENTS JOIN partsupp ON 1=1") == ("events",)
+
+    def test_each_query_registers_every_table_it_reads(self, spark):
+        """With no temp view left over, every registry query that registers
+        views must still analyse: a table missing from its set raises here
+        instead of silently reading a stale view from another sf_dir."""
+        from map_spark_sql_spark.queries import QUERIES
+
+        names = [n for n, fn in QUERIES.items() if "_register_views" in fn.__code__.co_names]
+        assert len(names) >= 50
+        for name in names:
+            for t in spark.catalog.listTables():
+                if t.isTemporary:
+                    spark.catalog.dropTempView(t.name)
+            QUERIES[name](spark, SF_DIR).schema
