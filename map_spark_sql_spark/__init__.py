@@ -9,8 +9,9 @@ GBIF occurrence-map tile pyramid), re-expressed as idiomatic PySpark:
   row-UDFs on the hot path, so whole-stage codegen and AQE apply end-to-end;
 - the pipeline (ingest -> stats/routing -> points | tiles -> encode ->
   salted sorted write) is declarative DataFrame code;
-- binary tile encoding (the reference's RDD detours) is an Arrow-batched
-  ``mapInPandas`` step producing a ``binary`` column;
+- binary encoding (the reference's RDD detours) is Arrow-batched: an
+  ``arrow_udf`` for point features and one partition-local ``mapInArrow``
+  for tiles, each producing a ``binary`` column;
 - north-star extensions (dedup, similarity search, text analysis, multimodal
   columns) live in :mod:`map_spark_sql_spark.operators`.
 

@@ -195,7 +195,8 @@ def pareto_frontier(
 
     # dict.fromkeys dedupes while preserving order: a caller passing q_col
     # or l_col inside keep_cols would otherwise produce duplicate columns
-    # and an ambiguous-reference error at the join below
+    # and an ambiguous-reference error at the join below (and in the
+    # output, which selects the same list)
     proj = list(dict.fromkeys([*keep_cols, q_col, l_col]))
     scored = (
         df.filter(F.col(q_col).isNotNull() & F.col(l_col).isNotNull())
@@ -230,7 +231,7 @@ def pareto_frontier(
             (F.col(l_col) == F.col("_gmax"))
             & (F.col("_hmax").isNull() | (F.col(l_col) > F.col("_hmax")))
         )
-        .select(*keep_cols, q_col, l_col)
+        .select(*proj)
     )
 
 

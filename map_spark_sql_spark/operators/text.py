@@ -247,14 +247,15 @@ def bm25_topk(
     """
     from pyspark.sql import Window
 
-    terms_lit = ", ".join(f"'{t}'" for t in query_terms)
-    words = f"filter({_words(f'lower({text_col})', 'spark')}, t -> t <> '')"
+    # the terms are literals, never SQL text: a quote in a term is data
+    terms = F.array(*[F.lit(t) for t in query_terms])
+    words = F.expr(f"filter({_words(f'lower({text_col})', 'spark')}, t -> t <> '')")
     base = (
         df.filter(F.col(text_col).isNotNull())
         .select(
             F.col(id_col),
-            F.expr(f"size({words})").cast("long").alias("dl"),
-            F.expr(f"filter({words}, t -> t IN ({terms_lit}))").alias("_qw"),
+            F.size(words).cast("long").alias("dl"),
+            F.filter(words, lambda t: F.array_contains(terms, t)).alias("_qw"),
         )
         .localCheckpoint(eager=False)
     )
@@ -297,7 +298,7 @@ def bm25_topk_oracle(
     b: float = 0.75,
     table: str = "documents",
 ) -> str:
-    terms_lit = ", ".join(f"'{t}'" for t in query_terms)
+    terms_lit = ", ".join("'" + t.replace("'", "''") + "'" for t in query_terms)
     words = f"list_filter({_words('lower(text)', 'duckdb')}, t -> t <> '')"
     return f"""
 WITH base AS (

@@ -749,9 +749,9 @@ def run_pipeline(
                     # mid-zoom ladder; see _mid_zoom_cap for the 300x
                     # kernel-OOM forensics this encodes
                     df = df.coalesce(_mid_zoom_cap(zoom))
-                # chunked X5 encoder: low-zoom whale tiles are sliced in the
-                # JVM before the Python encode (encode_tiles ships the whole
-                # pixel array per row — worker-fatal at rung scale)
+                # X5 encoder: every tile is sliced into pixel runs in the
+                # JVM and joined back in one partition-local mapInArrow, so
+                # a low-zoom whale tile never crosses to Python whole
                 kv = to_key_values(encode_tiles_chunked(df), _family, "tile")
                 spark = df.sparkSession
                 fallback_key = (

@@ -6,13 +6,17 @@ and Mapbox Vector Tiles for the tiles path (``VectorTiles.java:34-86``) —
 deliberately avoiding Java UDFs because Spark 2.3's ``byte[]`` wrapping was
 slow (comments ``PointMapBuilder.java:83``, ``TileMapBuilder.java:163``).
 
-The PySpark analogue of that decision is an **Arrow-batched pandas UDF**: the
+The PySpark analogue of that decision is **Arrow-batched Python**: the
 aggregated rows cross to Python once, in columnar batches, and come back as a
-``binary`` column — no per-row pickling, no RDD hop. The MVT/protobuf wire
-formats themselves need libraries this container doesn't ship, so the byte
-layout here is a documented deterministic stand-in (SURVEY.md §2.7: "byte
-exactness with the Java encoder is a non-goal, structural equality is the
-contract"); ``decode_*`` inverses make that structure testable.
+``binary`` column — no per-row pickling, no RDD hop. Points go through an
+``arrow_udf``; tiles are sliced into bounded pixel runs in the JVM and joined
+back per tile in one partition-local ``mapInArrow``
+(:func:`encode_tiles_chunked`), so the encode adds no exchange and no grouped
+stage. The MVT/protobuf wire formats themselves need libraries this project
+does not depend on, so the byte layout here is a documented deterministic
+stand-in (SURVEY.md §2.7: "byte exactness with the Java encoder is a
+non-goal, structural equality is the contract"); ``decode_*`` inverses make
+that structure testable.
 
 Formats (all little-endian, lengths as uint32):
 
@@ -27,9 +31,7 @@ Formats (all little-endian, lengths as uint32):
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
@@ -95,12 +97,12 @@ def decode_tile_py(blob: bytes) -> list[dict]:
 # records are fixed-width (pixel header <iiI> = 12 B, feature <iq> = 12 B;
 # point feature <ddiq> = 28 B), so a batch's entire body assembles as ONE
 # numpy integer matrix whose row-major bytes ARE the packed records; the
-# per-row work left is slicing bytes at record offsets. The UDFs are Spark
-# 4.1 `arrow_udf`s: the column arrives as a `pyarrow.Array` (zero Python
-# boxing — offsets + primitive child arrays), runs on the same byte-bounded
-# ArrowEvalPython batching as the pandas UDFs they replace (whale batches
-# still close at arrow.maxBytesPerBatch), and the pure-Python codecs above
-# stay as the unit-testable spec the kernels are pinned byte-identical to.
+# per-row work left is slicing bytes at record offsets. The columns arrive
+# as `pyarrow.Array`s (an `arrow_udf` for points, `mapInArrow` for tiles:
+# zero Python boxing — offsets + primitive child arrays) in byte-bounded
+# batches (whale batches still close at arrow.maxBytesPerBatch), and the
+# pure-Python codecs above stay as the unit-testable spec the kernels are
+# pinned byte-identical to.
 
 
 def _assert_no_nulls(arr, what: str):
@@ -148,18 +150,17 @@ def _exclusive_cumsum(counts):
 def _tile_body_records(pixels):
     """The 12-byte wire records of a flattened pixel StructArray as an
     (n_pixels + n_features) x 3 little-endian uint32 matrix: row-major
-    ``tobytes()`` equals the concatenation encode_tile_block_py produces.
-    Pixel headers land at record index ``i + features_before(i)``; the
-    feature records fill every other slot in flattened order."""
+    ``tobytes()`` equals the body :func:`encode_tile_py` writes after its
+    header. Pixel headers land at record index ``i + features_before(i)``;
+    the feature records fill every other slot in flattened order."""
     import numpy as np
+    import pyarrow.compute as pc
 
     px = _np_field(pixels, "px").astype("<i4")
     py = _np_field(pixels, "py").astype("<i4")
     feats_col = pixels.field("features")
     _assert_no_nulls(feats_col, "pixel features-array")
     nf = _list_lengths(feats_col)
-    import pyarrow.compute as pc
-
     feats = pc.list_flatten(feats_col)
     bor = _np_field(feats, "borYear").astype("<i4")
     occ = _np_field(feats, "occCount").astype("<i8")
@@ -180,32 +181,82 @@ def _tile_body_records(pixels):
     return buf, nf
 
 
-def _encode_tiles_batch(tile_arr, header: bool):
-    """One Arrow batch of tile pixel-arrays -> BinaryArray of wire blobs
-    (``header=True``: full TILE_MAGIC|u32(npx) blobs; False: body runs for
-    the chunked assembler)."""
-    import pyarrow as pa
+def _tile_run_bodies(run_arr):
+    """One Arrow batch of pixel runs -> ``(body, off)``: the wire records of
+    every run as one byte buffer, and each run's start offset in it (one
+    entry longer than the batch). Consecutive runs are consecutive in
+    ``body``, so the body of a tile whose runs share a batch is the single
+    slice ``body[off[first]:off[last + 1]]``."""
     import pyarrow.compute as pc
 
-    _assert_no_nulls(tile_arr, "tile pixel-array")
-    npx = _list_lengths(tile_arr)
-    pixels = pc.list_flatten(tile_arr)
-    buf, nf = _tile_body_records(pixels)
-    body = memoryview(buf.tobytes())
+    _assert_no_nulls(run_arr, "tile pixel-array")
+    npx = _list_lengths(run_arr)
+    buf, nf = _tile_body_records(pc.list_flatten(run_arr))
     pix_off = _exclusive_cumsum(npx)
-    rec_off = (pix_off + _exclusive_cumsum(nf)[pix_off]) * 12
-    if header:
-        blobs = [
-            TILE_MAGIC
-            + struct.pack("<I", int(npx[i]))
-            + bytes(body[rec_off[i] : rec_off[i + 1]])
-            for i in range(npx.shape[0])
-        ]
-    else:
-        blobs = [
-            bytes(body[rec_off[i] : rec_off[i + 1]]) for i in range(npx.shape[0])
-        ]
-    return pa.array(blobs, type=pa.binary())
+    return memoryview(buf.tobytes()), (pix_off + _exclusive_cumsum(nf)[pix_off]) * 12
+
+
+def _assemble_tiles(batches, keys: list[str]):
+    """``mapInArrow`` body of :func:`encode_tiles_chunked`: a partition's
+    pixel runs in, one ``(*keys, value)`` row per tile out.
+
+    Every run row carries its tile's key columns, pixel count ``_npx``,
+    run count ``_nrun`` and run index ``_idx``. The runs of a tile arrive
+    consecutively (one Generate input row per tile), so a tile ends at its
+    last run and its blob is ``TILE_MAGIC | u32(npx) | run bodies``. A tile
+    may straddle Arrow batches: the open tile's body carries over as bytes
+    (at most one tile's blob is ever held), and its key columns are read
+    again from the row that closes it. The contiguity is checked, not
+    trusted: a run index other than the next one expected, or a partition
+    that ends inside a tile, raises."""
+    import numpy as np
+    import pyarrow as pa
+
+    parts: list[bytes] = []  # body so far of the tile open at a batch boundary
+    expect_next = 0  # run index the next row must carry
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        idx_col = batch.column("_idx")
+        # explode_outer turns a null or empty run sequence into a null index
+        _assert_no_nulls(idx_col, "tile run-index")
+        body, off = _tile_run_bodies(batch.column("_run"))
+        idx = idx_col.to_numpy().astype(np.int64)
+        last = idx == batch.column("_nrun").to_numpy() - 1
+        expect = np.empty(n, dtype=np.int64)
+        expect[0] = expect_next
+        expect[1:] = np.where(last[:-1], 0, idx[:-1] + 1)
+        bad = np.flatnonzero(idx != expect)
+        if bad.size:
+            i = int(bad[0])
+            raise ValueError(
+                f"tile runs out of order: run {idx[i]} where run {expect[i]} "
+                "was expected; a tile's runs must be consecutive in its partition"
+            )
+        ends = np.flatnonzero(last)
+        starts = np.maximum(ends - idx[ends], 0)
+        off, npx = off.tolist(), batch.column("_npx").to_pylist()
+        values = []
+        for s, e in zip(starts.tolist(), ends.tolist()):
+            blob = [TILE_MAGIC, struct.pack("<I", npx[e]), *parts, body[off[s] : off[e + 1]]]
+            values.append(b"".join(blob))
+            parts = []
+        if last[-1]:
+            expect_next = 0
+        else:
+            parts.append(bytes(body[off[max(n - 1 - int(idx[-1]), 0)] :]))
+            expect_next = int(idx[-1]) + 1
+        if values:
+            out = batch.select(keys).take(pa.array(starts))
+            yield pa.RecordBatch.from_arrays(
+                [*out.columns, pa.array(values, type=pa.binary())], names=[*keys, "value"]
+            )
+    if expect_next:
+        raise ValueError(
+            f"partition ended inside a tile: run {expect_next} never arrived; "
+            "a tile's runs must be consecutive in its partition"
+        )
 
 
 _POINT_DT = None  # built lazily: numpy packed struct dtype of the PF1 record
@@ -259,156 +310,69 @@ def encode_point_features(points: DataFrame, features_col: str = "features") -> 
     return points.withColumn("value", _enc(F.col(features_col))).drop(features_col)
 
 
-def encode_tiles(tiles: DataFrame, tile_col: str = "tile") -> DataFrame:
-    """tiles-path rows -> (key, mapKey, z, x, y, value binary); X5 analogue.
-
-    Ships each row's WHOLE pixel array to the Python worker — fine at mid/
-    high zooms (tile payload shrinks 4x per zoom), fatal for low-zoom whale
-    tiles at rung scale: a z2 tile over ~1.2B fanned rows is ~10M+ pixel
-    structs; even the unboxed Arrow transfer is a whole-tile buffer per row
-    (caught by the 1000x blob gate, round 7). Use
-    :func:`encode_tiles_chunked` wherever a whale tile can appear; output
-    is byte-identical (pinned in pytest)."""
-
-    @F.arrow_udf(BinaryType())
-    def _enc(col):
-        return _encode_tiles_batch(col, header=True)
-
-    return tiles.withColumn("value", _enc(F.col(tile_col))).drop(tile_col)
-
-
-def encode_tile_block_py(pixels: list) -> bytes:
-    """Body bytes of a pixel run — :func:`encode_tile_py` without the
-    header. Concatenating block bodies in pixel order and prefixing
-    ``TILE_MAGIC | u32(total_pixels)`` reproduces the full blob exactly,
-    which is what makes the wire format whale-safe to produce: it is a
-    length-prefixed CONCATENATION, so no single process ever has to hold
-    the whole tile as objects."""
-    out = []
-    for p in pixels:
-        feats = p["features"]
-        out.append(struct.pack("<iiI", p["px"], p["py"], len(feats)))
-        for f in feats:
-            out.append(struct.pack("<iq", f["borYear"], f["occCount"]))
-    return b"".join(out)
-
-
 def encode_tiles_chunked(
     tiles: DataFrame, tile_col: str = "tile", chunk: int = 16384
 ) -> DataFrame:
-    """Whale-safe X5 encoder, byte-identical to :func:`encode_tiles`.
+    """tiles-path rows -> (key, mapKey, z, x, y, value binary); X5 analogue,
+    whale-safe: no row larger than one run ever crosses to Python.
 
-    The pixel array is sliced into <= ``chunk``-pixel runs IN THE JVM
-    (``slice`` over a ``sequence`` of offsets — native expressions, no
-    giant row ever crosses to Python), each run's body bytes are encoded
-    by an Arrow-batched pandas UDF (bounded object count per call), and
-    the per-tile blob is assembled by joining the run bodies in slice
-    order under the ``TILE_MAGIC | u32(nPixels)`` header. The assembly
-    buffer equals the output blob's own size — irreducible, since the
-    blob IS the result row — but no stage multiplies it through Python
-    object boxing (~10-20x), which is what crashed workers at the 1000x
-    rung. Scale shape: one extra narrow shuffle (chunk re-group), Python
-    memory bounded by ``chunk``, JVM aggregation buffer bounded by the
-    blob size.
+    Every tile is sliced IN THE JVM into runs of at most ``chunk`` pixels,
+    adapted to the tile's density: the real row-size driver is pixel
+    ENTRIES (pixels x their features arrays — ~130 borYears per pixel at
+    z<=2, where "16384 pixels" is a ~30-50MB row), so each tile gets
+    ``chunk_elems / avg features-per-pixel`` pixels per run, clamped to
+    [16, chunk]. The sequence explodes run INDEXES and each run's ``slice``
+    is computed lazily per output row, so the whale tile exists once per
+    in-flight row and is never copied whole (materialising every run up
+    front was a BufferHolder.grow OOM at the 100x composed build's z<=2
+    writes). A null tile still gets one run row (``explode_outer``, and
+    ``_nrun`` is at least 1), so the encoder rejects it instead of a plain
+    explode dropping it.
+
+    One partition-local ``mapInArrow`` then encodes the runs and joins each
+    tile's consecutive runs under ``TILE_MAGIC | u32(nPixels)``
+    (:func:`_assemble_tiles`): no exchange, no grouped stage, one Python
+    node. Two bounds hold: a run is at most ~``chunk_elems`` entries, and
+    an Arrow batch closes at ``spark.sql.execution.arrow.maxBytesPerBatch``
+    (set by ``get_session``) whatever its row count; the assembler holds at
+    most one tile's blob across batches — irreducible, since the blob IS
+    the result row.
     """
     from pyspark.sql.types import StructField, StructType
 
-    others = [c for c in tiles.columns if c != tile_col]
-    base_fields = [tiles.schema[c] for c in others]
-    asm_schema = StructType(base_fields + [StructField("value", BinaryType())])
-
-    # Two bounds compose here (both learned at the 1000x rung):
-    # 1. Per-ROW bound: a whale tile is sliced into <= chunk-pixel runs in
-    #    the JVM, so no single value crossing to Python exceeds ~chunk
-    #    pixels of boxed objects.
-    # 2. Per-BATCH bound: scalar pandas UDFs batch by row count (10000
-    #    default), which multiplied even 20MB chunk rows into tens of GB —
-    #    get_session sets spark.sql.execution.arrow.maxBytesPerBatch so a
-    #    batch closes at 32MB regardless of row count.
-    # Small tiles (the overwhelming majority past z2 — payload shrinks 4x
-    # per zoom) take the narrow whole-row encode: zero extra shuffles.
-    # Only whale tiles pay the chunk fan-out + one assembly shuffle, whose
-    # applyInPandas group = one tile, bounded by the blob's own size
-    # (irreducible — the blob IS the result row). The filter-split does
-    # NOT double-compute the upstream aggregation: both branches sit on
-    # the same exchange and Spark's ReuseExchange shares the shuffle
-    # files (block-caching t3 here instead OOM'd the 100x composed run —
-    # ~340MB partitions x 17 zooms of block storage on the default heap).
-    small = tiles.filter(F.size(F.col(tile_col)) <= chunk)
-    big = tiles.filter(F.size(F.col(tile_col)) > chunk)
-
-    @F.arrow_udf(BinaryType())
-    def _enc_whole(col):
-        return _encode_tiles_batch(col, header=True)
-
-    small_enc = small.withColumn("value", _enc_whole(F.col(tile_col))).select(
-        *others, "value"
+    keys = [c for c in tiles.columns if c != tile_col]
+    schema = StructType(
+        [tiles.schema[c] for c in keys] + [StructField("value", BinaryType())]
     )
-
-    @F.arrow_udf(BinaryType())
-    def _enc_block(col):
-        return _encode_tiles_batch(col, header=False)
-
-    def _asm_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_idx")
-        value = (
-            TILE_MAGIC
-            + struct.pack("<I", int(pdf["_npx"].iloc[0]))
-            + b"".join(bytes(b) for b in pdf["_body"])
-        )
-        out = pdf.iloc[[0]][[f.name for f in base_fields]].copy()
-        out["value"] = [value]
-        return out
-
-    # Chunk width adapts PER ROW to its element density: the real row-size
-    # driver is pixel-ENTRIES (pixels x their features arrays — ~130
-    # borYears per pixel at z<=2, where "16384 pixels" is a ~30-50MB row),
-    # so each tile gets chunk_px = chunk_elems / its avg features-per-px,
-    # clamped to [16, chunk]. And the sequence explodes INDEXES with the
-    # slice computed lazily per output row — the old
-    # transform-then-posexplode materialized every chunk up front, i.e. a
-    # SECOND full copy of the whale tile inside one generate-input row
-    # (BufferHolder.grow OOM at the 100x composed build's z<=2 writes even
-    # under the task cap). The input tile still exists once per in-flight
-    # row — irreducible — but nothing doubles it.
-    chunk_elems = 262144  # ~4-6MB chunk rows at wire width
-    chunked = (
-        big.withColumn("_npx", F.size(F.col(tile_col)))
+    chunk_elems = 262144  # ~4-6MB runs at wire width
+    runs = (
+        tiles.withColumn("_npx", F.size(F.col(tile_col)))
         .withColumn(
             "_cpx",
             F.expr(
-                # coalesce: size(NULL) is -1 under non-ANSI semantics, so a
-                # null features array would silently skew _cpx low (r8
-                # advice #4); count it as 0 elements instead
                 f"least(CAST({chunk} AS INT), greatest(16, CAST({chunk_elems} DIV "
-                f"greatest(1L, aggregate({tile_col}, 0L, "
-                f"(a, p) -> a + coalesce(size(p.features), 0)) "
-                f"DIV size({tile_col})) AS INT)))"
+                f"greatest(1L, aggregate({tile_col}, 0L, (a, p) -> a + size(p.features)) "
+                f"DIV greatest(1, size({tile_col}))) AS INT)))"
             ),
         )
+        .withColumn("_nrun", F.expr("CAST((greatest(_npx, 1) - 1) DIV _cpx + 1 AS INT)"))
         .select(
-            *others,
+            *keys,
             "_npx",
             "_cpx",
+            "_nrun",
             F.col(tile_col),
-            F.posexplode(
-                F.expr(f"sequence(0, (size({tile_col}) - 1) DIV _cpx)")
-            ).alias("_idx", "_i"),
+            F.explode_outer(F.expr("sequence(0, _nrun - 1)")).alias("_idx"),
         )
         .select(
-            *others,
+            *keys,
             "_npx",
+            "_nrun",
             "_idx",
-            F.expr(f"slice({tile_col}, _idx * _cpx + 1, _cpx)").alias("_chunk"),
+            F.expr(f"slice({tile_col}, _idx * _cpx + 1, _cpx)").alias("_run"),
         )
     )
-    big_enc = (
-        chunked.withColumn("_body", _enc_block(F.col("_chunk")))
-        .drop("_chunk")
-        .groupBy(*others)
-        .applyInPandas(_asm_group, asm_schema)
-    )
-    return small_enc.unionByName(big_enc)
+    return runs.mapInArrow(lambda it: _assemble_tiles(it, keys), schema)
 
 
 # --- oracle-side wire-format reconstruction (DuckDB SQL) --------------------

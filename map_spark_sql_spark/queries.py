@@ -662,8 +662,8 @@ def _tile_blob_query(epsg: str, zoom: int, where_extra: str = ""):
                 F.col("mapKey"), F.lit(zoom), F.col("x"), F.col("y"), modulus=SALT_MOD
             ),
         )
-        # chunked encoder: whale z<=2 tiles never cross to Python as one
-        # object-exploded row (byte-identical to encode_tiles, pinned)
+        # the pipeline's own encoder: runs sliced in the JVM, joined in one
+        # mapInArrow (byte-identical to encode_tile_py, pinned in pytest)
         kv = TBLOB.to_key_values(TBLOB.encode_tiles_chunked(t3), family, "tile")
         return kv.select(
             "key",

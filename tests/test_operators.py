@@ -265,6 +265,39 @@ class TestText:
         assert rows[(1, "banana")]["rnk"] == 2
         assert all(r["rnk"] <= 2 for r in rows.values())
 
+    def test_bm25_quoted_term_is_data(self, spark, docs):
+        """A query term is a literal, not SQL text: a term holding a quote
+        neither breaks the plan nor moves the other terms' ranking, and
+        the DuckDB twin escapes it to the same ranking."""
+        import duckdb
+        import pandas as pd
+
+        terms = ["fox", "dog", "spark"]
+
+        def ranked(df, ts):
+            return [
+                (r["doc_id"], r["score"], r["rank"])
+                for r in TX.bm25_topk(df, ts, k=10).collect()
+            ]
+
+        assert ranked(docs, terms + ["o'brien"]) == ranked(docs, terms)
+
+        rows = [
+            (1, "o'brien saw the fox"),
+            (2, "the lazy dog slept"),
+            (3, "o'brien and o'brien again"),
+            (4, "nothing to see here"),
+        ]
+        got = ranked(spark.createDataFrame(rows, "doc_id long, text string"),
+                     terms + ["o'brien"])
+        con = duckdb.connect()
+        con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+        want = con.execute(TX.bm25_topk_oracle(terms + ["o'brien"], k=10)).fetchall()
+        con.close()
+        assert [(d, k) for d, _, k in got] == [(d, k) for d, _, k in want]
+        assert [s for _, s, _ in got] == pytest.approx([s for _, s, _ in want])
+        assert 3 in [d for d, _, _ in got]  # its only query term is o'brien
+
     def test_hash_split_deterministic_and_row_local(self, spark):
         from map_spark_sql_spark.operators import sampling as SP
 
@@ -2544,8 +2577,11 @@ class TestParetoFrontier:
         df = spark.createDataFrame(
             [(1, 7, 10), (2, 8, 30)], "doc_id long, q long, l long"
         )
-        got = {r["doc_id"] for r in pareto_frontier(df, "q", "l", "doc_id", "q").collect()}
+        out = pareto_frontier(df, "q", "l", "doc_id", "q")
+        got = {r["doc_id"] for r in out.collect()}
         assert got == {2}
+        assert out.columns == ["doc_id", "q", "l"]
+        out.select("q")  # raises on an ambiguous duplicate column
 
 
 class TestGroupedCorr:

@@ -127,6 +127,13 @@ def test_whale_guard_two_level_equals_one_level(occurrence_df, monkeypatch):
     routed.unpersist()
 
 
+def _pixels(tile) -> list[dict]:
+    return [
+        {"px": p.px, "py": p.py, "features": [f.asDict() for f in p.features]}
+        for p in tile
+    ]
+
+
 def test_binary_encoders_roundtrip(occurrence_df):
     ing = P.ingest(occurrence_df, CFG)
     large = P.keys_exceeding_threshold(P.map_key_stats(ing), CFG)
@@ -140,23 +147,110 @@ def test_binary_encoders_roundtrip(occurrence_df):
         assert decoded == want
 
     t3 = P.tiles_path(P.route_tiles(ing, large), CFG, "EPSG:4326", 1)
-    enc_t = T.encode_tiles(t3).collect()
+    enc_t = T.encode_tiles_chunked(t3).collect()
     src_t = {r.key: r.tile for r in t3.collect()}
     for r in enc_t:
-        decoded = T.decode_tile_py(r.value)
-        want = [
-            {"px": p.px, "py": p.py, "features": [f.asDict() for f in p.features]}
-            for p in src_t[r.key]
-        ]
-        assert decoded == want
+        assert T.decode_tile_py(r.value) == _pixels(src_t[r.key])
 
-    # the whale-safe chunked encoder must be byte-identical to the
-    # whole-row encoder — tiny chunk forces real multi-chunk assembly
+    # a tiny chunk forces real multi-run assembly; the blob must still be
+    # byte-identical to the pure-Python spec
     chunked = {
         r.key: bytes(r.value) for r in T.encode_tiles_chunked(t3, chunk=3).collect()
     }
-    whole = {r.key: bytes(r.value) for r in enc_t}
-    assert chunked == whole and len(chunked) > 0
+    spec = {k: T.encode_tile_py(_pixels(tile)) for k, tile in src_t.items()}
+    assert chunked == spec and len(chunked) > 0
+
+
+def test_chunked_encoder_runs_cross_arrow_batches(occurrence_df, spark):
+    """Two rows per Arrow batch and three pixels per run: every tile of
+    more than six pixels has its runs split across batches, so the
+    assembler must carry an open tile's body from one batch to the next."""
+    ing = P.ingest(occurrence_df, CFG)
+    large = P.keys_exceeding_threshold(P.map_key_stats(ing), CFG)
+    t3 = P.tiles_path(P.route_tiles(ing, large), CFG, "EPSG:3857", 4)
+    src = {r.key: r.tile for r in t3.collect()}
+    assert max(len(t) for t in src.values()) > 2 * 3, "no tile spans a batch"
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "2")
+    try:
+        got = {
+            r.key: bytes(r.value)
+            for r in T.encode_tiles_chunked(t3, chunk=3).collect()
+        }
+    finally:
+        spark.conf.unset(key)
+    assert got == {k: T.encode_tile_py(_pixels(t)) for k, t in src.items()}
+
+
+def test_chunked_assembler_rejects_broken_contiguity():
+    """The assembler trusts no run order: a run index other than the next
+    one expected, and a partition that ends inside a tile, both raise
+    instead of emitting a tile with missing or misplaced pixels."""
+    import pyarrow as pa
+    import pytest
+
+    px = {"px": 1, "py": 2, "features": [{"borYear": 3, "occCount": 4}]}
+
+    def batch(rows):
+        key, npx, nrun, idx, run = zip(*rows)
+        return pa.RecordBatch.from_pydict(
+            {"key": list(key), "_npx": list(npx), "_nrun": list(nrun),
+             "_idx": list(idx), "_run": list(run)}
+        )
+
+    ok = [batch([("a", 2, 2, 0, [px])]), batch([("a", 2, 2, 1, [px]), ("b", 1, 1, 0, [px])])]
+    out = pa.Table.from_batches(list(T._assemble_tiles(iter(ok), ["key"])))
+    assert out.column("key").to_pylist() == ["a", "b"]
+    assert out.column("value").to_pylist() == [
+        T.encode_tile_py([px, px]), T.encode_tile_py([px])
+    ]
+    skipped = [batch([("a", 3, 3, 0, [px]), ("a", 3, 3, 2, [px])])]
+    with pytest.raises(ValueError, match="out of order"):
+        list(T._assemble_tiles(iter(skipped), ["key"]))
+    interleaved = [batch([("a", 2, 2, 0, [px]), ("b", 1, 1, 0, [px])])]
+    with pytest.raises(ValueError, match="out of order"):
+        list(T._assemble_tiles(iter(interleaved), ["key"]))
+    truncated = [batch([("a", 2, 2, 0, [px])])]
+    with pytest.raises(ValueError, match="partition ended inside a tile"):
+        list(T._assemble_tiles(iter(truncated), ["key"]))
+
+
+def _plan_node_names(df) -> list[str]:
+    """Every node name of ``df``'s executed plan, walked as a tree after
+    an action so the adaptive plan is final."""
+    df.collect()
+    jvm = df.sparkSession._jvm
+    stack = [
+        jvm.org.apache.spark.sql.execution.SparkPlanInfo.fromSparkPlan(
+            df._jdf.queryExecution().executedPlan()
+        )
+    ]
+    names = []
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_zoom_write_encoder_plan_shape(occurrence_df):
+    """A zoom's encode is one partition-local Python node: no union of a
+    small and a big branch, no grouped assembly stage, at a mid zoom and
+    at a whale (z<=2) zoom alike."""
+    ing = P.ingest(occurrence_df, CFG)
+    large = P.keys_exceeding_threshold(P.map_key_stats(ing), CFG)
+    routed = P.route_tiles(ing, large)
+    for zoom in (4, 1):
+        assert (zoom <= P._WHALE_ZOOM) == (zoom == 1)
+        names = _plan_node_names(
+            T.encode_tiles_chunked(P.tiles_path(routed, CFG, "EPSG:3857", zoom))
+        )
+        python = [
+            n for n in names if "Python" in n or "InPandas" in n or "InArrow" in n
+        ]
+        assert python == ["MapInArrow"], (zoom, names)
+        assert "Union" not in names and "FlatMapGroupsInPandas" not in names
 
 
 def test_vectorized_tile_encoder_edge_values(spark):
@@ -180,7 +274,7 @@ def test_vectorized_tile_encoder_edge_values(spark):
         "key string, tile array<struct<px:int,py:int,"
         "features:array<struct<borYear:int,occCount:bigint>>>>",
     )
-    got = bytes(T.encode_tiles(df).collect()[0]["value"])
+    got = bytes(T.encode_tiles_chunked(df).collect()[0]["value"])
     assert got == T.encode_tile_py(tile)
     assert T.decode_tile_py(got) == tile
 
@@ -197,19 +291,18 @@ def test_vectorized_encoders_raise_on_nulls(spark):
         "features:array<struct<borYear:int,occCount:bigint>>>>"
     )
     null_tile = spark.createDataFrame([("k", None)], tile_schema)
-    with pytest.raises(Exception, match="null"):
-        T.encode_tiles(null_tile).collect()
     null_field = spark.createDataFrame(
         [("k", [{"px": 1, "py": 2, "features": [{"borYear": None, "occCount": 3}]}])],
         tile_schema,
     )
-    with pytest.raises(Exception, match="null"):
-        T.encode_tiles(null_field).collect()
     null_feats = spark.createDataFrame(
         [("k", [{"px": 1, "py": 2, "features": None}])], tile_schema
     )
-    with pytest.raises(Exception, match="null"):
-        T.encode_tiles(null_feats).collect()
+    for bad in (null_tile, null_field, null_feats):
+        # chunk=1 also covers the multi-run path
+        for chunk in (16384, 1):
+            with pytest.raises(Exception, match="null"):
+                T.encode_tiles_chunked(bad, chunk=chunk).collect()
     null_points = spark.createDataFrame(
         [("k", None)],
         "mapKey string, features array<struct<lat:double,lng:double,"
