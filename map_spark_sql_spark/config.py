@@ -34,9 +34,6 @@ class MapConfiguration:
     max_zoom: int = 16
     key_salt_modulus: int = 10
     projections: tuple[str, ...] = field(default=DEFAULT_PROJECTIONS)
-    # Spark-side knobs (our addition): target shuffle partitions for the
-    # materialization write; None => leave it to AQE.
-    ingest_partitions: int | None = None
 
     @classmethod
     def from_yaml(cls, path: str) -> "MapConfiguration":

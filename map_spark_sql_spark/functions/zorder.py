@@ -14,9 +14,6 @@ DuckDB, so the oracle can pin it. 16 bits per axis covers zoom 16's
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 BITS = 16
 
 
@@ -42,11 +39,3 @@ def morton_py(x: int, y: int, bits: int = BITS) -> int:
         out |= ((x >> i) & 1) << (2 * i)
         out |= ((y >> i) & 1) << (2 * i + 1)
     return out
-
-
-def morton(x: Column | str, y: Column | str, bits: int = BITS) -> Column:
-    xc = x if isinstance(x, str) else None
-    yc = y if isinstance(y, str) else None
-    if xc is None or yc is None:
-        raise TypeError("pass column names (the expression is SQL-text based)")
-    return F.expr(morton_sql(xc, yc, bits))

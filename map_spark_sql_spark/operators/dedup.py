@@ -131,13 +131,6 @@ def simhash_from_hashes_sql(hashes: str, bits: int, d: str) -> str:
     return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
 
 
-def simhash_sql(text: str, bits: int, d: str) -> str:
-    """One-shot SimHash expression (recomputes token hashes per bit — prefer
-    :func:`token_hashes_sql` + :func:`simhash_from_hashes_sql` staged via a
-    column/CTE, which runs md5 once per token instead of ``bits`` times)."""
-    return simhash_from_hashes_sql(token_hashes_sql(text, d), bits, d)
-
-
 def content_hash_sql(text: str, d: str) -> str:
     """Normalized content digest: md5 of lowercased whitespace-collapsed text."""
     flags = "" if d == "spark" else ", 'g'"

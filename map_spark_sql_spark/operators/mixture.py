@@ -21,19 +21,6 @@ from pyspark.sql import functions as F
 from map_spark_sql_spark.operators.text import token_counts_sql
 
 
-def _bucket_pm_sql(id_expr: str, d: str) -> str:
-    """Deterministic 0..999 per-mille bucket from the id's md5 (the
-    sampling.hash_bucket_sql shape at per-mille resolution)."""
-    if d == "spark":
-        return (
-            f"CAST(conv(substring(md5(CAST({id_expr} AS STRING)), 1, 8), 16, 10) "
-            f"AS BIGINT) % 1000"
-        )
-    return (
-        f"CAST(('0x' || substr(md5(CAST({id_expr} AS VARCHAR)), 1, 8)) AS BIGINT) % 1000"
-    )
-
-
 def _bucket_ppm_sql(id_expr: str, d: str) -> str:
     """Per-MILLION md5 bucket: the per-mille rule rounds to a 0 acceptance
     ratio once a source's token mass exceeds 1000x the budget (the 10x-scale

@@ -69,20 +69,6 @@ def cosine_topk(
     )
 
 
-def cosine_topk_oracle(
-    query_vec: list[float],
-    k: int = 10,
-    table: str = "embeddings",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> str:
-    sim = cosine_sql(vec_col, query_vec, "duckdb")
-    return (
-        f"SELECT {id_col}, {sim} AS sim FROM {table} "
-        f"ORDER BY sim DESC, {id_col} LIMIT {k}"
-    )
-
-
 def dot_cols_sql(a: str, b: str, d: str) -> str:
     """Dot product between two array *columns* (vs :func:`dot_sql`'s
     column x literal)."""

@@ -7,7 +7,6 @@ from map_spark_sql_spark.plans.pipeline import (
     route_points,
     route_tiles,
     run_tile_family,
-    tile_pyramid,
     tiles_path,
 )
 
@@ -20,6 +19,5 @@ __all__ = [
     "route_points",
     "route_tiles",
     "run_tile_family",
-    "tile_pyramid",
     "tiles_path",
 ]

@@ -16,11 +16,12 @@ Differences from the reference, all deliberate (SURVEY.md §4):
 - Every UDF is a native expression -> whole-stage codegen survives across
   the entire stage; the reference breaks codegen at each of its five Java
   UDF call sites.
-- The pyramid can derive zoom z from zoom z+1 (pixel z = pixel z+1 div 2)
+- The pyramid derives zoom z from zoom z+1 (pixel z = pixel z+1 div 2)
   instead of rescanning the base table for all 17 zooms; at 100 TB this cuts
   the scan volume ~17x for the lower levels (SURVEY.md §4 caveat). The
-  per-zoom recompute remains the semantics-defining baseline and is what the
-  correctness oracle checks.
+  reference's per-zoom recompute stays the semantics-defining baseline:
+  ``tiles_path`` is that recompute for one zoom, and it is what the tests
+  and the correctness oracle compare the derived pyramid against.
 """
 
 from __future__ import annotations
@@ -193,6 +194,10 @@ def tiles_path(
 ) -> DataFrame:
     """t1 -> t2 -> t3 for one (projection, zoom) — TileMapBuilder.java:113-158.
 
+    Recomputes the zoom from the base counts, as the reference's per-zoom
+    loop does. This is the per-zoom recompute reference: ``run_tile_family``
+    derives each lower zoom instead, and tests pin the two equal.
+
     t1 (U3+A4): project to global pixel, SUM occurrence counts per
         (mapKey, xy, borYear);
     t2 (P4+A5): drop unplottable, collect borYearCount structs per pixel;
@@ -202,106 +207,16 @@ def tiles_path(
     Output: ``key string ("salt:mapKey:z:x:y"), mapKey, z, x, y,
     tile array<struct<x:int, y:int, features:array<struct<borYear,occCount>>>>``.
     """
-    if epsg == "EPSG:3031":
-        # O5: Antarctic subset (100 km buffer), TileMapBuilder.java:59-62
-        routed = routed.filter(F.col("lat") <= 1)
-
-    counts = routed.groupBy("mapKey", "lat", "lng", "borYear").agg(
-        F.count(F.lit(1)).alias("occCount")
-    )
-
-    t1 = (
-        counts.withColumn("xy", global_pixel(epsg, zoom, cfg.tile_size, "lat", "lng"))
-        .filter(F.col("xy").isNotNull())
-        .groupBy("mapKey", "xy", "borYear")
-        .agg(F.sum("occCount").alias("occCount"))
-    )
+    t1 = _t1_level(_base_counts(routed, epsg), None, cfg, epsg, zoom)
     return _t2_t3(t1, cfg, epsg, zoom)
-
-
-def tile_pyramid(
-    routed: DataFrame,
-    cfg: MapConfiguration,
-    epsg: str,
-    derive_lower_zooms: bool = True,
-    persist_t1: bool | None = None,
-    t1_echo_dir: str | None = None,
-    resume: bool = False,
-) -> dict[int, DataFrame]:
-    """All zoom levels maxZoom..0 for one projection (TileMapBuilder.java:66-77).
-
-    The reference recomputes every zoom from the base table ("slowest first"
-    loop, comment at ``TileMapBuilder.java:69``). With
-    ``derive_lower_zooms=True`` we compute only maxZoom from the base and roll
-    each lower zoom up from the previous one's t1 aggregate — a pixel at zoom
-    z is ``pixel(z+1) div 2`` — which scans ~1/17th of the data for the lower
-    pyramid. Both modes produce identical t1 aggregates; tests assert the
-    equivalence and the oracle pins the recompute semantics.
-
-    ``persist_t1`` (default: on when deriving) pins each level's t1
-    aggregate via ``localCheckpoint`` so the derivation chain doesn't
-    lazily recompute all higher zooms on every level's action — without
-    it, deriving is *slower* than recomputing, because level z's action
-    replays z+1..maxZoom. localCheckpoint (not ``persist``) because it
-    CUTS LINEAGE, which a 17-level chain needs twice over: Catalyst
-    re-optimizes the whole accumulated plan on every zoom's write
-    (quadratic planning), and each action stringifies its physical plan
-    for the UI/listener — at depth ~17 x whale-guard width those
-    descriptions reach tens of MB each and OOM'd the composed 4-CRS run's
-    8 GiB heap in ``StringConcat.toString`` (caught by the full-build
-    receipt, round 7). This is the in-memory form of the reference's O2
-    materialization barriers; on a real cluster swap it for a parquet
-    echo (``materialize``) — localCheckpoint does not survive executor
-    loss and t1 may exceed cluster cache.
-
-    ``t1_echo_dir`` IS that swap: when set, each level's t1 is written to
-    ``{t1_echo_dir}/z{zoom}`` parquet and re-read instead of block-cached —
-    the reference's own O2 materialization barrier (S2/S3 CTAS,
-    ``TileMapBuilder.java:85-104``). Required at rung scale: the 100x
-    composed run's t1 chain is ~100M rows PER LEVEL at deep zooms, and
-    pinning 17 such levels in block storage OOM'd the 8 GiB heap
-    (GCLocker thrash in the spill read-ahead) where the parquet echo
-    streams through executor memory and bounds the footprint at one
-    shuffle's worth. Callers own cleanup of the echo dir (run_pipeline
-    deletes it per CRS).
-
-    ``resume`` (requires ``t1_echo_dir``): a level whose echo dir already
-    carries ``_SUCCESS`` is READ instead of recomputed, so a pyramid
-    interrupted mid-derivation restarts from the deepest surviving echo
-    rather than from the base table (r7 verdict ask #2 — the reference's
-    zoom loop gets the same restart granularity from Oozie retries,
-    ``workflow/Backfill.java:36-93``). Safe because the echo write is
-    atomic-enough (``_SUCCESS`` lands last) and the input is immutable
-    between attempts.
-    """
-    if persist_t1 is None:
-        persist_t1 = derive_lower_zooms
-    if resume and t1_echo_dir is None:
-        raise ValueError("tile_pyramid(resume=True) requires t1_echo_dir")
-    counts = _base_counts(routed, epsg)
-
-    out: dict[int, DataFrame] = {}
-    t1 = None
-    for zoom in range(cfg.max_zoom, -1, -1):
-        if resume and _is_complete(f"{t1_echo_dir}/z{zoom}"):
-            # surviving echo level: read, don't recompute (and don't rewrite)
-            t1 = routed.sparkSession.read.parquet(f"{t1_echo_dir}/z{zoom}")
-            out[zoom] = _t2_t3(t1, cfg, epsg, zoom)
-            continue
-        t1 = _t1_level(counts, t1, cfg, epsg, zoom, derive_lower_zooms)
-        if t1_echo_dir is not None:
-            t1 = materialize(t1, f"{t1_echo_dir}/z{zoom}")
-        elif persist_t1:
-            t1 = t1.localCheckpoint(eager=False)
-        out[zoom] = _t2_t3(t1, cfg, epsg, zoom)
-    return out
 
 
 def _base_counts(routed: DataFrame, epsg: str) -> DataFrame:
     """Per-coordinate occurrence counts feeding a projection's t1 chain
     (the pre-aggregation the reference's ``TileMapBuilder.java:80-84``
     query does before projecting); EPSG:3031 sees only the southern
-    hemisphere (P5, ``MapBuilder.java:119``)."""
+    hemisphere plus a 100 km buffer, ``lat <= 1`` (O5/P5,
+    ``TileMapBuilder.java:59-62``, ``MapBuilder.java:119``)."""
     if epsg == "EPSG:3031":
         routed = routed.filter(F.col("lat") <= 1)
     return routed.groupBy("mapKey", "lat", "lng", "borYear").agg(
@@ -315,14 +230,13 @@ def _t1_level(
     cfg: MapConfiguration,
     epsg: str,
     zoom: int,
-    derive_lower_zooms: bool,
 ) -> DataFrame:
     """One zoom's t1 aggregate (A4): from the base counts when there is no
-    deeper level (or in recompute mode, the reference's per-zoom loop at
+    deeper level (the reference's per-zoom loop at
     ``TileMapBuilder.java:66-77``), else rolled up from ``t1_prev`` —
-    ``pixel(z) = pixel(z+1) div 2``. Both forms are pinned equivalent by
-    ``test_pipeline.py::test_derive_equals_recompute``."""
-    if t1_prev is None or not derive_lower_zooms:
+    ``pixel(z) = pixel(z+1) div 2``. Both forms are pinned equivalent at
+    every zoom by ``test_pipeline.py::test_pyramid_derivation_equivalence``."""
+    if t1_prev is None:
         return (
             counts.withColumn(
                 "xy", global_pixel(epsg, zoom, cfg.tile_size, "lat", "lng")
@@ -350,7 +264,6 @@ def run_tile_family(
     epsg: str,
     write,
     t1_echo_dir: str,
-    derive_lower_zooms: bool = True,
     resume: bool = False,
     sink_complete=None,
 ) -> None:
@@ -359,12 +272,11 @@ def run_tile_family(
     sink is written immediately, and only THEN is the next level derived —
     so at most two corpus-scale echo levels exist at any instant (the one
     being consumed and, transiently, its parent awaiting the prune that
-    fires once the child echo lands). ``tile_pyramid`` +
-    ``materialize_pyramid`` kept the write order (deepest first, O8
-    ``TileMapBuilder.java:69``) but materialized the ENTIRE echo chain
-    before the first sink write, so peak scratch was all ``max_zoom+1``
-    levels (~45 GiB at the 1000x rung) and a resumed build re-derived
-    pruned echoes for already-committed sinks from the base table.
+    fires once the child echo lands). Zooms run deepest first (O8,
+    ``TileMapBuilder.java:69``). Echoing the ENTIRE chain before the first
+    sink write would hold all ``max_zoom+1`` levels (~45 GiB at the 1000x
+    rung) and make a resumed build re-derive pruned echoes for
+    already-committed sinks from the base table.
 
     ``write(zoom, t3_df)`` is the caller's sink (``run_pipeline`` passes
     its encode + salted-sorted write); it runs under a labeled job (X7).
@@ -375,7 +287,7 @@ def run_tile_family(
     z1..z0 with a surviving z1 echo touches neither the base table nor
     z16..z2 (r9 advice #1's economics). When no usable echo survives, the
     first needed level computes directly from the base counts (one scan —
-    the recompute-mode semantics, already pinned equivalent to derivation).
+    the ``tiles_path`` recompute, pinned equivalent to derivation).
     """
     if t1_echo_dir is None:
         raise ValueError("run_tile_family requires t1_echo_dir")
@@ -403,9 +315,7 @@ def run_tile_family(
             # surviving echo level: read, don't recompute (and don't rewrite)
             t1 = spark.read.parquet(echo_path)
         else:
-            t1 = materialize(
-                _t1_level(counts, t1, cfg, epsg, zoom, derive_lower_zooms), echo_path
-            )
+            t1 = materialize(_t1_level(counts, t1, cfg, epsg, zoom), echo_path)
         # this level's echo is in place, so the PARENT echo is consumable:
         # its sink committed in the previous iteration (or before the
         # interrupt this resume is recovering from — everything deeper than
@@ -646,7 +556,6 @@ def run_pipeline(
     occurrence: DataFrame,
     cfg: MapConfiguration,
     out_dir: str,
-    derive_lower_zooms: bool = True,
     instrument=None,
     resume: bool = False,
 ) -> dict[str, str]:
@@ -679,7 +588,6 @@ def run_pipeline(
         encode_tiles_chunked,
         to_key_values,
     )
-    from map_spark_sql_spark.sources.writers import write_salted_sorted
 
     ins = instrument or (lambda name: nullcontext())
 
@@ -702,48 +610,28 @@ def run_pipeline(
         if not (resume and _is_complete(f"{out_dir}/points")):
             points = points_path(route_points(ing, large), cfg)
             kv = to_key_values(encode_point_features(points), "EPSG_4326", "features")
-            # same guard as the z<=2 tile writes (see write_zoom's NOTE for
-            # the conf-scoping rationale): at rung scale each view's A6
-            # array is millions of structs, and with <= ~89 groups the
+            # same guard as the z<=2 tile writes: at rung scale each view's
+            # A6 array is millions of structs, and with <= ~89 groups the
             # object-hash agg never falls back — threshold 1 streams one
             # view per task through the capped points aggregation
-            spark = occurrence.sparkSession
-            _fb = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-            spark.conf.set(_fb, "1")
-            try:
-                write_salted_sorted(
-                    with_salt_column(kv),
-                    f"{out_dir}/points",
-                    num_partitions=cfg.key_salt_modulus,
-                )
-            finally:
-                spark.conf.unset(_fb)
+            _write_sink(kv, f"{out_dir}/points", cfg, sort_based=True)
 
     routed = route_tiles(ing, large)
     layout = {"ingested": f"{out_dir}/ingested", "points": f"{out_dir}/points"}
     for epsg in cfg.projections:
         family = epsg.replace(":", "_")
-        zoom_dirs = {
-            z: f"{out_dir}/tiles/{family}/z{z}" for z in range(cfg.max_zoom, -1, -1)
-        }
         with ins(f"tiles:{family}"):
-            if resume and all(_is_complete(d) for d in zoom_dirs.values()):
-                # completed projection (its echo dir was already cleaned)
-                layout[f"tiles/{family}"] = f"{out_dir}/tiles/{family}"
-                continue
             # t1 levels echo through parquet (the reference's O2 CTAS
             # barrier) rather than block storage: at rung scale a deep-zoom
             # t1 level is ~the corpus size, and 17 cached levels OOM'd the
             # default heap where the parquet echo streams through. The
             # interleaved loop (run_tile_family) writes each zoom's sink as
             # soon as its echo lands and prunes the parent echo, so peak
-            # scratch is ~2 levels, not the whole chain.
+            # scratch is ~2 levels, not the whole chain. A resumed build
+            # whose sinks are all committed returns from it at once.
             echo_dir = f"{out_dir}/_t1/{family}"
 
-            def write_zoom(
-                zoom: int, df: DataFrame, _family: str = family, _echo=echo_dir
-            ) -> None:
-                sink = f"{out_dir}/tiles/{_family}/z{zoom}"
+            def write_zoom(zoom: int, df: DataFrame, _family: str = family) -> None:
                 if _WHALE_ZOOM < zoom <= _MID_ZOOM:
                     # bind the reduce stage (rollup -> encode) to the
                     # mid-zoom ladder; see _mid_zoom_cap for the 300x
@@ -753,41 +641,19 @@ def run_pipeline(
                 # JVM and joined back in one partition-local mapInArrow, so
                 # a low-zoom whale tile never crosses to Python whole
                 kv = to_key_values(encode_tiles_chunked(df), _family, "tile")
-                spark = df.sparkSession
-                fallback_key = (
-                    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+                # The z<=2 levels have FEWER groups per task than the
+                # object-hash fallback threshold (default 128), so the
+                # level-2 collect never falls back and holds EVERY tile
+                # group's compact blocks in memory at once — several GB/task
+                # at rung scale (OOM'd a 20 GiB heap at z1 even with the
+                # task cap). Sort-based aggregation streams one group's tile
+                # at a time through each of the capped tasks.
+                _write_sink(
+                    kv,
+                    f"{out_dir}/tiles/{_family}/z{zoom}",
+                    cfg,
+                    sort_based=zoom <= _WHALE_ZOOM,
                 )
-                # NOTE (r8 advice #2/#3): this override is session-global.
-                # write_zoom only ever runs inside the sequential
-                # run_tile_family loop of a build that owns its
-                # SparkSession, so the temporary pin cannot race; a
-                # concurrent caller on a SHARED session would briefly see
-                # sort-based aggregation forced. Restore is by unset —
-                # ``conf.get(key, None)`` returns the registered DEFAULT
-                # ('128') for unset keys, so a save/restore pair would
-                # just re-pin the default; unset returns the key to
-                # whatever the session default is. A caller-pinned custom
-                # value is deliberately not preserved (none exists in
-                # this codebase; the build owns the session).
-                if zoom <= _WHALE_ZOOM:
-                    # The z<=2 levels have FEWER groups per task than the
-                    # object-hash fallback threshold (default 128), so the
-                    # level-2 collect never falls back and holds EVERY
-                    # tile group's compact blocks in memory at once —
-                    # several GB/task at rung scale (OOM'd a 20 GiB heap
-                    # at z1 even with the task cap). Threshold 1 forces
-                    # sort-based aggregation: one group's tile at a time
-                    # streams through each of the capped tasks.
-                    spark.conf.set(fallback_key, "1")
-                try:
-                    write_salted_sorted(
-                        with_salt_column(kv),
-                        sink,
-                        num_partitions=cfg.key_salt_modulus,
-                    )
-                finally:
-                    if zoom <= _WHALE_ZOOM:
-                        spark.conf.unset(fallback_key)
 
             run_tile_family(
                 routed,
@@ -795,7 +661,6 @@ def run_pipeline(
                 epsg,
                 write_zoom,
                 t1_echo_dir=echo_dir,
-                derive_lower_zooms=derive_lower_zooms,
                 resume=resume,
                 sink_complete=lambda z, _f=family: _is_complete(
                     f"{out_dir}/tiles/{_f}/z{z}"
@@ -879,25 +744,46 @@ def warn_low_zoom_heap(
     return need_gib
 
 
-def materialize_pyramid(pyramid: dict[int, DataFrame], write) -> None:
-    """Run the pyramid's writes deepest-zoom-first with labeled jobs.
-
-    X7 (``TileMapBuilder.java:67,70``): each zoom's job carries a
-    ``setJobDescription`` for UI observability; O8 (``TileMapBuilder.java:69``):
-    z16 first — the slowest job starts while the cluster is fully free and
-    fails fast.
-    """
-    for zoom in sorted(pyramid, reverse=True):
-        df = pyramid[zoom]
-        sc = df.sparkSession.sparkContext
-        sc.setJobDescription(f"Processing zoom {zoom}")
-        try:
-            write(zoom, df)
-        finally:
-            sc.setJobDescription(None)
-
-
 def with_salt_column(df: DataFrame, key_col: str = "key") -> DataFrame:
     """Expose the salt prefix as its own column for the sink repartition
     (X2, SaltPrefixPartitioner.java:29-31 parses it back out of the key)."""
     return df.withColumn("salt", F.split(F.col(key_col), ":").getItem(0).cast("int"))
+
+
+_FALLBACK_KEY = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+
+
+def _write_sink(
+    kv: DataFrame, path: str, cfg: MapConfiguration, sort_based: bool
+) -> None:
+    """X2/X3 sink write of a key-value frame: salted, sorted parquet in
+    ``cfg.key_salt_modulus`` partitions. ``sort_based`` pins the object-hash
+    aggregation fallback threshold to 1 for the write, so a stage with few,
+    huge groups streams one group at a time instead of buffering them all.
+
+    NOTE (r8 advice #2/#3): the override is session-global. Sink writes only
+    ever run sequentially inside a build that owns its SparkSession, so the
+    temporary pin cannot race; a concurrent caller on a SHARED session would
+    briefly see sort-based aggregation forced. Restore is by unset —
+    ``conf.get(key, None)`` returns the registered DEFAULT ('128') for unset
+    keys, so a save/restore pair would just re-pin the default; unset returns
+    the key to whatever the session default is. A caller-pinned custom value
+    is deliberately not preserved (none exists in this codebase; the build
+    owns the session).
+
+    ``writers.write_salted_sorted`` is looked up at call time, so a wrapper
+    installed on the module (a tracer, a test's fault injection) sees every
+    sink write.
+    """
+    from map_spark_sql_spark.sources import writers
+
+    spark = kv.sparkSession
+    if sort_based:
+        spark.conf.set(_FALLBACK_KEY, "1")
+    try:
+        writers.write_salted_sorted(
+            with_salt_column(kv), path, num_partitions=cfg.key_salt_modulus
+        )
+    finally:
+        if sort_based:
+            spark.conf.unset(_FALLBACK_KEY)

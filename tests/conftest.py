@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -17,17 +16,39 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[8]")
-        .appName("map_spark_sql_spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    """The production session config (the one the bench and the driver
+    use), with a fixed shuffle width for small test inputs."""
+    from map_spark_sql_spark.session import get_session
+
+    s = get_session(app_name="map_spark_sql_spark-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def _plan_nodes(df, execute: bool):
+    """Yield ``(nodeName, simpleString)`` for every node of ``df``'s
+    physical plan, walked as a tree. ``execute`` runs an action first, so
+    the adaptive plan is the final one; without it the walk sees the plan
+    as built, before AQE re-optimizes it at runtime."""
+    if execute:
+        df.collect()
+    jvm = df.sparkSession._jvm
+    stack = [
+        jvm.org.apache.spark.sql.execution.SparkPlanInfo.fromSparkPlan(
+            df._jdf.queryExecution().executedPlan()
+        )
+    ]
+    while stack:
+        node = stack.pop()
+        yield node.nodeName(), node.simpleString()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+@pytest.fixture(scope="session")
+def plan_nodes():
+    """The shared plan-tree walker: ``plan_nodes(df, execute=...)``."""
+    return _plan_nodes
 
 
 OCCURRENCE_SCHEMA = StructType(

@@ -2486,7 +2486,7 @@ class TestKcore:
         got = {r["id"]: r["core_degree"] for r in G.kcore(df, k=2, rounds=2).collect()}
         assert got == {0: 2, 1: 2, 2: 2}
 
-    def test_peel_plan_is_window_free_anti_join(self, spark):
+    def test_peel_plan_is_window_free_anti_join(self, spark, plan_nodes):
         """The r12 peel replaces the r11 per-round window counts (two full
         sort+shuffles of the edge table per round — the driver-board
         regression) with a partial-aggregable degree groupBy + anti-joins
@@ -2499,9 +2499,12 @@ class TestKcore:
 
         k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
         df = spark.createDataFrame(k4, "src long, dst long")
-        plan = G.kcore(df, k=3, rounds=4)._jdf.queryExecution().executedPlan().toString()
-        assert "Window" not in plan
-        assert plan.count("LeftAnti") == 8  # 2 per round x 4 rounds
+        # walked as built: on K4 with k=3 the failing set is empty, so AQE
+        # removes every anti-join once the plan runs
+        nodes = list(plan_nodes(G.kcore(df, k=3, rounds=4), execute=False))
+        assert not [n for n, _ in nodes if n == "Window"]
+        anti = [s for n, s in nodes if n.endswith("Join") and "LeftAnti" in s]
+        assert len(anti) == 8, anti  # 2 per round x 4 rounds
 
 
 class TestTrailingRangeStats:

@@ -35,7 +35,7 @@ def test_stats_and_threshold(occurrence_df):
     assert "1:99" not in large
 
 
-def test_routing_disjoint_and_broadcast(occurrence_df, spark):
+def test_routing_disjoint_and_broadcast(occurrence_df, plan_nodes):
     ing = P.ingest(occurrence_df, CFG)
     large = P.keys_exceeding_threshold(P.map_key_stats(ing), CFG)
     pts = P.route_points(ing, large)
@@ -45,8 +45,9 @@ def test_routing_disjoint_and_broadcast(occurrence_df, spark):
     assert pk.isdisjoint(tk)
     assert pk | tk == {r.mapKey for r in P.map_key_stats(ing).select("mapKey").collect()}
     # J1/J2 must be broadcast joins, not shuffle joins
-    plan = tls._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    joins = [n for n, _ in plan_nodes(tls, execute=False) if n.endswith("Join")]
+    assert joins, "routing lost its join"
+    assert set(joins) <= {"BroadcastHashJoin", "BroadcastNestedLoopJoin"}, joins
 
 
 def test_points_path_schema_and_content(occurrence_df):
@@ -87,17 +88,27 @@ def test_antarctic_subset(occurrence_df):
     assert total >= south_rows - 1  # buffer duplication can only add
 
 
-def test_pyramid_derivation_equivalence(occurrence_df):
-    """Rolling z from z+1 must equal recomputing z from base (SURVEY §4)."""
+def test_pyramid_derivation_equivalence(occurrence_df, tmp_path):
+    """Rolling z from z+1 (``run_tile_family``) must equal recomputing z
+    from base (``tiles_path``, the reference's per-zoom loop; SURVEY §4) at
+    every zoom, in both world projections."""
     ing = P.ingest(occurrence_df, CFG)
     large = P.keys_exceeding_threshold(P.map_key_stats(ing), CFG)
     routed = P.route_tiles(ing, large).cache()
-    derived = P.tile_pyramid(routed, CFG, "EPSG:3857", derive_lower_zooms=True)
-    recomputed = P.tile_pyramid(routed, CFG, "EPSG:3857", derive_lower_zooms=False)
-    for z in (CFG.max_zoom, 2, 0):
-        d = {(r.key, r.x, r.y): r.tile for r in derived[z].collect()}
-        r_ = {(r.key, r.x, r.y): r.tile for r in recomputed[z].collect()}
-        assert d == r_, f"zoom {z} mismatch"
+    for epsg in ("EPSG:3857", "EPSG:4326"):
+        derived: dict[int, dict] = {}
+
+        def write(zoom: int, df) -> None:
+            derived[zoom] = {(r.key, r.x, r.y): r.tile for r in df.collect()}
+
+        echo = str(tmp_path / epsg.replace(":", "_"))
+        P.run_tile_family(routed, CFG, epsg, write, t1_echo_dir=echo)
+        assert sorted(derived) == list(range(CFG.max_zoom + 1))
+        for z, d in derived.items():
+            recomputed = P.tiles_path(routed, CFG, epsg, z).collect()
+            r_ = {(r.key, r.x, r.y): r.tile for r in recomputed}
+            assert d, f"{epsg} zoom {z} is empty"
+            assert d == r_, f"{epsg} zoom {z} mismatch"
     routed.unpersist()
 
 
@@ -215,26 +226,7 @@ def test_chunked_assembler_rejects_broken_contiguity():
         list(T._assemble_tiles(iter(truncated), ["key"]))
 
 
-def _plan_node_names(df) -> list[str]:
-    """Every node name of ``df``'s executed plan, walked as a tree after
-    an action so the adaptive plan is final."""
-    df.collect()
-    jvm = df.sparkSession._jvm
-    stack = [
-        jvm.org.apache.spark.sql.execution.SparkPlanInfo.fromSparkPlan(
-            df._jdf.queryExecution().executedPlan()
-        )
-    ]
-    names = []
-    while stack:
-        node = stack.pop()
-        names.append(node.nodeName())
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
-    return names
-
-
-def test_zoom_write_encoder_plan_shape(occurrence_df):
+def test_zoom_write_encoder_plan_shape(occurrence_df, plan_nodes):
     """A zoom's encode is one partition-local Python node: no union of a
     small and a big branch, no grouped assembly stage, at a mid zoom and
     at a whale (z<=2) zoom alike."""
@@ -243,9 +235,8 @@ def test_zoom_write_encoder_plan_shape(occurrence_df):
     routed = P.route_tiles(ing, large)
     for zoom in (4, 1):
         assert (zoom <= P._WHALE_ZOOM) == (zoom == 1)
-        names = _plan_node_names(
-            T.encode_tiles_chunked(P.tiles_path(routed, CFG, "EPSG:3857", zoom))
-        )
+        encoded = T.encode_tiles_chunked(P.tiles_path(routed, CFG, "EPSG:3857", zoom))
+        names = [n for n, _ in plan_nodes(encoded, execute=True)]
         python = [
             n for n in names if "Python" in n or "InPandas" in n or "InArrow" in n
         ]
@@ -550,8 +541,7 @@ def test_warn_low_zoom_heap_sizing_rule(occurrence_df, spark, tmp_path):
     from map_spark_sql_spark.config import MapConfiguration
     from map_spark_sql_spark.plans.pipeline import (
         _parse_mem_gib,
-        materialize,
-        tile_pyramid,
+        run_tile_family,
         warn_low_zoom_heap,
     )
 
@@ -565,7 +555,8 @@ def test_warn_low_zoom_heap_sizing_rule(occurrence_df, spark, tmp_path):
     large = P.keys_exceeding_threshold(P.map_key_stats(ing), cfg)
     routed = P.route_tiles(ing, large)
     echo = str(tmp_path / "echo")
-    tile_pyramid(routed, cfg, "EPSG:3857", t1_echo_dir=echo)[0].count()
+    # the z0 echo is the family's last level, so the loop never prunes it
+    run_tile_family(routed, cfg, "EPSG:3857", lambda zoom, df: None, t1_echo_dir=echo)
 
     # a generous heap stays quiet; a absurdly small one warns with the rule
     with warnings.catch_warnings():
@@ -651,9 +642,9 @@ def test_interleaved_family_two_level_echo_peak(
     """r9 advice #3: run_tile_family must hold at most TWO echo levels on
     disk at any instant (the level just derived plus, until the prune that
     immediately follows, its parent) — measured after every echo write and
-    at every sink write, not claimed. Content parity with tile_pyramid is
-    asserted on one level; the run_pipeline e2e/resume digests cover the
-    rest."""
+    at every sink write, not claimed. Content parity with the per-zoom
+    recompute (tiles_path) is asserted on one level; the run_pipeline
+    e2e/resume digests cover the rest."""
     import os
 
     cfg = MapConfiguration(
@@ -695,7 +686,5 @@ def test_interleaved_family_two_level_echo_peak(
 
     assert order == [4, 3, 2, 1, 0]  # O8: deepest first
     assert peak["n"] <= 2, peak["n"]
-    want = sorted(
-        map(repr, P.tile_pyramid(routed, cfg, "EPSG:3857")[2].collect())
-    )
+    want = sorted(map(repr, P.tiles_path(routed, cfg, "EPSG:3857", 2).collect()))
     assert grabbed[2] == want

@@ -5,7 +5,8 @@ analog of ``MapBuilder.run()`` (MapBuilder.java:88-127) +
 ``TileMapBuilder.generate()`` (TileMapBuilder.java:51-77): ingest ->
 materialize -> map_key_stats -> threshold routing -> points branch
 (A2 -> A6 -> X4 encode -> S7 salted sorted sink) + 4-CRS x 17-zoom tile
-pyramids (derive-with-persist, t2/t3 -> X5 encode -> S7 sink per zoom) —
+pyramids (each zoom derived from the one above through a parquet t1 echo,
+t2/t3 -> X5 encode -> S7 sink per zoom) —
 as ONE job at a scale rung, and records:
 
 - wall-clock + peak process-tree RSS per stage (the receipt measures
@@ -615,9 +616,7 @@ def main() -> int:
 
     occ = Q.occurrence_df(spark, sf_dir)
     t_total = time.monotonic()
-    layout = run_pipeline(
-        occ, cfg, out_dir, derive_lower_zooms=True, instrument=instrument, resume=resume
-    )
+    layout = run_pipeline(occ, cfg, out_dir, instrument=instrument, resume=resume)
     total_wall = time.monotonic() - t_total
     print(f"BUILD DONE: {total_wall:.1f}s total, global peak rss "
           f"{sampler.global_peak // 1024} MiB; layout: {json.dumps(layout)}")
@@ -812,7 +811,6 @@ def main() -> int:
             "max_zoom": cfg.max_zoom,
             "key_salt_modulus": cfg.key_salt_modulus,
             "projections": list(cfg.projections),
-            "derive_lower_zooms": True,
         },
         "total_wall_s": round(total_wall, 1),
         "global_peak_rss_mib": sampler.global_peak // 1024,
