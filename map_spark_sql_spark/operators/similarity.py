@@ -1444,24 +1444,24 @@ def knn_edges_lsh_recall(
     exact builder is still feasible (<= ~10^5 vectors); past that rung the
     LSH path is the only one that runs, and this gate is the evidence it
     earned the swap."""
-    # Materialize both edge tables once (lazy localCheckpoint: the first
-    # action computes and pins the blocks); without this the three counts
-    # below recompute the full LSH pipeline (explode -> shuffle ->
-    # applyInPandas GEMM -> window) and the exact broadcast GEMM twice
-    # each — costly at exactly the ~10^5-vector rung this gate targets
-    # (r6 advice).
-    exact = quantized_knn_edges(emb, k=k).localCheckpoint(eager=False)
+    # One lazy 1-row plan, no driver count() jobs: the counts come from a
+    # single full outer join of the two edge tables, so each edge build
+    # runs once. (Cross-joining three separate counts would not: column
+    # pruning makes each branch a different subtree, so no exchange is
+    # reused and both builds run twice.) Both builders emit each
+    # (src, dst) pair at most once, so the join matches pair to pair.
+    exact = quantized_knn_edges(emb, k=k).withColumn("in_exact", F.lit(True))
     lsh = quantized_knn_edges_lsh(
         emb, k=k, dim=dim, bits=bits, n_tables=n_tables, max_bucket=max_bucket
-    ).localCheckpoint(eager=False)
-    hit = exact.join(lsh, ["src", "dst"], "left_semi")
-    n_exact = exact.count()
-    n_lsh = lsh.count()
-    n_hit = hit.count()
-    spark = emb.sparkSession
-    return spark.createDataFrame(
-        [(n_exact, n_lsh, n_hit, 1000000 * n_hit // max(n_exact, 1))],
-        "n_exact long, n_lsh long, n_hit long, recall_ppm long",
+    ).withColumn("in_lsh", F.lit(True))
+    return (
+        exact.join(lsh, ["src", "dst"], "full_outer")
+        .agg(
+            F.count("in_exact").alias("n_exact"),
+            F.count("in_lsh").alias("n_lsh"),
+            F.count_if(F.col("in_exact") & F.col("in_lsh")).alias("n_hit"),
+        )
+        .withColumn("recall_ppm", F.expr("(1000000 * n_hit) div greatest(n_exact, 1)"))
     )
 
 

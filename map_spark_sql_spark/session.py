@@ -86,6 +86,17 @@ def get_session(
         # (sources/readers.py), and DuckDB oracles read the same values as
         # naive UTC — both sides must render identical wall-clock instants.
         .config("spark.sql.session.timeZone", "UTC")
+        # Keep every generated class for the session. The default cache
+        # holds 100 classes, fewer than one board pass (~245) or one map
+        # build (109); reuse is cyclic, so LRU evicted each class before
+        # its next use and every warm pass recompiled ~220 (board) and
+        # 54-65 (map build) of them. One sweep of all 213 registry
+        # queries at sf0.001 compiles about 2650 distinct classes, so 4096
+        # holds the whole working set. Its cost: ~15 MiB heap after GC for
+        # the board; for the full registry +30-40 MiB non-heap (Metaspace,
+        # code cache) and up to ~140 MiB heap. A static conf: it sizes the
+        # cache once per JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -96,3 +107,12 @@ def get_session(
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark
+
+
+def compiled_classes(spark: SparkSession) -> int:
+    """How many classes whole-stage and expression codegen have compiled
+    in this JVM so far: the count of Spark's own ``CodegenMetrics``
+    compilation-time histogram, read over py4j. A cache hit compiles
+    nothing, so the difference across a run is its compile count."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -1,11 +1,14 @@
 """Isolated repeat-timer for single registry queries (guide §1.1/§1.4).
 
-Runs each named query N times in ONE warm session and reports every
-timing plus the min (the noise floor on a box with ~19% run-to-run
-swing). The timed action mirrors bench.py's collect() of the bounded
-result so numbers are comparable with the bench; pass --noop to time a
+Runs each named query N times in ONE session and reports every timing
+plus the min (the noise floor on a box with ~19% run-to-run swing), and
+per rep the number of classes codegen compiled (``classes=``): rep 0 is
+the cold run, later reps show what a warm run still compiles. The timed
+action collects the result to the driver; pass --noop to time a
 noop-sink write instead (computes every column, no driver transfer) when
-diagnosing whether collect/driver transfer is the cost.
+diagnosing whether collect/driver transfer is the cost. bench.py times
+``.count()``, which may prune columns and joins, so neither action is
+comparable with it number for number.
 
 Usage: python tools/isolate_bench.py [--sf DIR] [--reps N] [--noop] query...
 """
@@ -36,17 +39,19 @@ def main() -> int:
             names.append(a)
 
     import __spark_entry__ as entrymod
-    from map_spark_sql_spark.session import get_session
+    from map_spark_sql_spark.session import compiled_classes, get_session
 
-    spark = get_session(app_name="isolate", master="local[32]", shuffle_partitions=32)
+    spark = get_session(app_name="isolate", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
 
     for name in names:
         fn = queries[name]
         times = []
+        classes = []
         for i in range(reps):
             spark.sparkContext.setJobDescription(f"{name} rep{i}")
+            c0 = compiled_classes(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             if noop:
@@ -54,10 +59,13 @@ def main() -> int:
             else:
                 df.collect()
             times.append(time.perf_counter() - t0)
+            classes.append(compiled_classes(spark) - c0)
         spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: min={min(times):.3f}s runs="
-            + ",".join(f"{t:.3f}" for t in times),
+            + ",".join(f"{t:.3f}" for t in times)
+            + " classes="
+            + ",".join(str(c) for c in classes),
             flush=True,
         )
     spark.stop()
