@@ -12,17 +12,13 @@ Scale notes (the 100 TB story):
 - Each round is one shuffle: an equi-join of the (vertex, label) table with
   the symmetrized edge table on vertex id, followed by a min-aggregate keyed
   on the neighbor — both hash-partitioned on well-distributed ids.
-- Rounds needed = component diameter. Near-dup graphs are overwhelmingly
-  small dense clusters (diameter 2-4); a ``max_iter`` bound plus an explicit
-  convergence check (count of changed labels, a bounded scalar per round)
-  terminates early. For adversarial long-chain graphs pass
-  ``algorithm="star"``: the classic large-star/small-star rewiring
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  implemented below) converges in O(log n) rounds regardless of diameter —
-  the long-chain pytest pins a 256-node path graph to <= 12 rounds where
-  min-label propagation would need 255. Both algorithms produce the
-  identical (id, cluster_id = component min) output, so they are
-  interchangeable under any oracle.
+- Rounds needed = component diameter (+1 confirming probe). Near-dup and
+  entity-resolution match graphs are small dense clusters: every registry
+  caller converges in <= 2 rounds at sf0.01 and sf0.1. A ``max_iter``
+  bound plus an explicit convergence check (the label sum, a bounded
+  scalar per round) terminates early; a graph whose diameter outruns
+  ``max_iter`` (a long chain) raises ``RuntimeError`` instead of
+  returning partial labels.
 - ``localCheckpoint`` after every round cuts the lineage chain — without it
   the logical plan doubles per iteration and planning time, not the data,
   becomes the bottleneck (on a cluster with HDFS, ``checkpoint`` to durable
@@ -46,25 +42,14 @@ def connected_components(
     vertices: DataFrame | None = None,
     id_col: str = "id",
     max_iter: int = 25,
-    algorithm: str = "label",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Label every vertex with the min vertex id reachable from it.
 
     ``edges``: undirected pair table (one row per pair, either orientation).
     ``vertices``: optional (id) table; vertices absent from ``edges`` become
-    singleton clusters. ``algorithm``: ``"label"`` (min-label propagation,
-    O(diameter) rounds — right for the dense low-diameter clusters near-dup
-    graphs produce) or ``"star"`` (large-star/small-star rewiring,
-    O(log n) rounds for any topology). ``stats``, if given, receives
-    ``{"rounds": <rounds executed>}``. Returns (id, cluster_id).
+    singleton clusters. Raises ``RuntimeError`` if the labels still change
+    in round ``max_iter``. Returns (id, cluster_id).
     """
-    if algorithm == "star":
-        return _connected_components_star(
-            edges, src, dst, vertices, id_col, max_iter, stats
-        )
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     # r11 optimization: cut the edge-builder lineage BEFORE symmetrizing —
     # both union legs otherwise re-run the caller's whole edge pipeline
     # (in the curation funnel that is the full MinHash/LSH pair build,
@@ -104,9 +89,7 @@ def connected_components(
         return tbl.agg(*aggs).first()
 
     prev_sum = None
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         # r11 optimization: one round = ONE aggregation. The old form
         # (join sym->labels, groupBy neighbor-min, left-join back onto
         # labels, coalesce) shuffled the label table twice per round; here
@@ -131,135 +114,13 @@ def connected_components(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels.select(F.col("u").alias(id_col), F.col("label").alias("cluster_id"))
-
-
-def _edge_fingerprint(e: DataFrame) -> tuple:
-    """(row count, xxhash64 checksum) of an edge set — an O(1)-state
-    convergence probe. One aggregate per round instead of an exceptAll
-    anti-join of two full edge tables; the per-edge hashes are summed, so a
-    changed edge set collides only if the multiset of 64-bit hashes sums
-    identically at equal cardinality (vanishing, and the alternation is
-    monotone so a false stop cannot produce wrong labels that pass the
-    star-shape final state — see _connected_components_star)."""
-    row = e.select(
-        F.count(F.lit(1)).alias("n"),
-        # DECIMAL(38,0) accumulator: a sum of int64 hashes overflows long
-        # (ANSI mode raises) after ~2^63 of headroom; decimal is exact
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-    ).first()
-    return (row["n"], row["h"])
-
-
-def _connected_components_star(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    vertices: DataFrame | None,
-    id_col: str,
-    max_iter: int,
-    stats: dict | None,
-) -> DataFrame:
-    """Large-star/small-star alternation (Kiveris et al. 2014).
-
-    Each round rewires edges toward component minima:
-
-    - **large-star** (around every center u over the symmetrized edge set):
-      every neighbor LARGER than u re-attaches to m = min(neighborhood of u,
-      u itself);
-    - **small-star** (around every center u of the larger-first oriented
-      edges): u and all its smaller neighbors attach to the smallest.
-
-    Both steps preserve connectivity and only ever decrease the attachment
-    target, so the edge set converges — in O(log n) rounds — to a disjoint
-    union of stars centered at each component's minimum id. Per round:
-    two hash-partitioned groupBy/join pairs on vertex id (same shuffle key
-    both times) + distinct; localCheckpoint cuts the per-round lineage.
-    A 2^16-vertex path graph needs 255 label-propagation rounds but ~5
-    alternations here (pinned by test_star_converges_log_rounds_on_chain).
-    """
-    e = (
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        # lazy: the fingerprint probe below materializes it in one job
-        .localCheckpoint(eager=False)
-    )
-    if vertices is not None:
-        verts = vertices.select(F.col(id_col).alias("u")).distinct()
     else:
-        verts = e.select("u").union(e.select(F.col("v").alias("u"))).distinct()
-
-    rounds = 0
-    fp = _edge_fingerprint(e)
-    # r11 note: a min-over-window variant (fusing each star's groupBy+join
-    # into one window) was measured and REVERTED — the window forces a full
-    # shuffle+sort of the symmetrized edge table per star, where the
-    # groupBy form shuffles only pre-aggregated per-center minima and lets
-    # AQE broadcast them back (sf0.1 ER graph: 2.7s -> 5.2s regression).
-    for _ in range(max_iter):
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # large-star: m(u) = min over neighborhood incl. self
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("u", "mv").alias("m"))
+        raise RuntimeError(
+            f"connected_components did not converge: labels still changed "
+            f"after {max_iter} rounds (max_iter={max_iter}); the graph's "
+            f"diameter exceeds the round bound"
         )
-        # r11: no distinct on e1. Its set is irrelevant downstream — m2's
-        # min absorbs duplicate (u, m) rows in the partial aggregate, the
-        # e1-m2 join emits exactly one output row per e1 row either way
-        # (m2 is one row per u), and e2's final distinct collapses the
-        # set. The removed exchange+aggregate cost one full shuffle of e1
-        # per round to save shuffling duplicate rows into the next two
-        # operators — but e1's row count is bounded by |sym| regardless
-        # (one output row per filtered sym row), so the duplicate mass the
-        # distinct collapsed is at most what the join shuffles anyway.
-        # Measured on the sf0.1 ER graph: 2.89 -> 2.25 s, labels
-        # identical row-for-row.
-        e1 = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        # small-star over larger-first edges: center u and every smaller
-        # neighbor attach to min(neighbors) (all < u by orientation)
-        m2 = e1.groupBy("u").agg(F.min("v").alias("m"))
-        e2 = (
-            e1.join(m2, "u")
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
-                        F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
-                    )
-                ).alias("s")
-            )
-            .select("s.u", "s.v")
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            # lazy: the per-round fingerprint probe materializes it, so
-            # the eager-checkpoint job per round is folded into the probe
-            .localCheckpoint(eager=False)
-        )
-        rounds += 1
-        nfp = _edge_fingerprint(e2)
-        e = e2
-        if nfp == fp:
-            break
-        fp = nfp
-    if stats is not None:
-        stats["rounds"] = rounds
-    parents = e.groupBy("u").agg(F.min("v").alias("cluster_id"))
-    return verts.join(parents, "u", "left").select(
-        F.col("u").alias(id_col),
-        F.coalesce("cluster_id", "u").alias("cluster_id"),
-    )
+    return labels.select(F.col("u").alias(id_col), F.col("label").alias("cluster_id"))
 
 
 def pagerank(

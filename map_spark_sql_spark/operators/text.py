@@ -1564,7 +1564,7 @@ def bpe_train(
         merges.append((r, t1, t2, int(n)))
         ws = ws.withColumn(
             "ws",
-            F.expr(f"replace(ws, '<{t1}><{t2}>', '<{t1}{t2}>')"),
+            F.replace(F.col("ws"), F.lit(f"<{t1}><{t2}>"), F.lit(f"<{t1}{t2}>")),
         ).localCheckpoint()
     return spark.createDataFrame(
         merges, "merge_round int, t1 string, t2 string, n bigint"

@@ -708,6 +708,8 @@ class TestConnectedComponents:
         assert got == {2: 2, 5: 2, 9: 2}
 
     def test_star_matches_label_on_mixed_graph(self, spark):
+        """A chain, a triangle, the path 7-20-5 and an isolated vertex:
+        every label is pinned to its component's min id."""
         from map_spark_sql_spark.operators.graph import connected_components
 
         edges = spark.createDataFrame(
@@ -717,42 +719,36 @@ class TestConnectedComponents:
         verts = spark.createDataFrame(
             [(i,) for i in [1, 2, 3, 4, 5, 7, 10, 11, 12, 20, 99]], "id long"
         )
-        label = {
+        got = {
             r["id"]: r["cluster_id"]
             for r in connected_components(edges, vertices=verts).collect()
         }
-        star = {
-            r["id"]: r["cluster_id"]
-            for r in connected_components(
-                edges, vertices=verts, algorithm="star"
-            ).collect()
+        assert got == {
+            1: 1, 2: 1, 3: 1, 4: 1,
+            5: 5, 7: 5, 20: 5,
+            10: 10, 11: 10, 12: 10,
+            99: 99,
         }
-        assert star == label
 
     def test_star_converges_log_rounds_on_chain(self, spark):
         """The adversarial case for min-label propagation: a path graph of
-        n vertices has diameter n-1, so propagation needs n-1 rounds (the
-        min label moves one hop per round). Large-star/small-star must
-        collapse the same chain in O(log n) alternations — pinned here at
-        <= 12 rounds for n = 256 (observed ~5; 255 for propagation)."""
+        n vertices has diameter n-1, so the min label moves one hop per
+        round and needs n-1 rounds plus a confirming probe. A chain longer
+        than ``max_iter`` allows must raise rather than return partial
+        labels; a chain that fits the default bound collapses to its min."""
         from map_spark_sql_spark.operators.graph import connected_components
 
-        n = 256
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(n - 1)], "a_id long, b_id long"
-        )
-        stats: dict = {}
-        got = connected_components(
-            edges, algorithm="star", max_iter=20, stats=stats
-        ).collect()
+        def path(n):
+            return spark.createDataFrame(
+                [(i, i + 1) for i in range(n - 1)], "a_id long, b_id long"
+            )
+
+        with pytest.raises(RuntimeError, match="max_iter=4"):
+            connected_components(path(256), max_iter=4).collect()
+
+        got = connected_components(path(12)).collect()
         assert {r["cluster_id"] for r in got} == {0}
-        assert len(got) == n
-        assert stats["rounds"] <= 12, stats
-        # and the diameter-bounded algorithm genuinely cannot do this in
-        # the same budget: capped at the star's round count it leaves the
-        # far end of the chain unmerged
-        capped = connected_components(edges, max_iter=stats["rounds"]).collect()
-        assert {r["cluster_id"] for r in capped} != {0}
+        assert len(got) == 12
 
 
 class TestCuration:

@@ -560,7 +560,7 @@ def test_warn_low_zoom_heap_sizing_rule(occurrence_df, spark, tmp_path):
 
     # a generous heap stays quiet; a absurdly small one warns with the rule
     with warnings.catch_warnings():
-        warnings.simplefilter("error")
+        warnings.simplefilter("error", UserWarning)
         need = warn_low_zoom_heap(spark, echo, cfg, heap_gib=64.0)
     assert need > 0.0
     with pytest.warns(UserWarning, match="SCALE.md round-7 sizing rule"):

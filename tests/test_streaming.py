@@ -549,7 +549,7 @@ def test_purchase_view_join_warns_on_hot_key_sample(spark):
         "event_id long, event_type string, user_id long",
     )
     with warnings.catch_warnings():
-        warnings.simplefilter("error")
+        warnings.simplefilter("error", UserWarning)
         purchase_view_join(stream, state_sample=cold, hot_pair_threshold=100)
 
 
