@@ -28,7 +28,6 @@ from map_spark_sql_spark.functions.encode import (
 from map_spark_sql_spark.functions.projection import (
     TILE_SCHEMAS,
     global_pixel,
-    global_pixel_sql,
     plottable,
     plottable_sql,
 )
@@ -51,7 +50,6 @@ __all__ = [
     "decode_bor_sql",
     "TILE_SCHEMAS",
     "global_pixel",
-    "global_pixel_sql",
     "plottable",
     "plottable_sql",
     "tile_addresses",

@@ -116,11 +116,6 @@ def global_pixel_xy_sql(epsg: str, zoom: int, tile_size: int, lat: str, lng: str
     return x, y
 
 
-def global_pixel_sql(epsg: str, zoom: int, tile_size: int, lat: str, lng: str) -> tuple[str, str]:
-    """Alias kept for symmetry with :func:`global_pixel` (returns (x, y) SQL)."""
-    return global_pixel_xy_sql(epsg, zoom, tile_size, lat, lng)
-
-
 # ---------------------------------------------------------------------------
 # Spark Column factories
 # ---------------------------------------------------------------------------

@@ -38,7 +38,6 @@ from map_spark_sql_spark.operators.temporal import (
     interval_overlap_join,
 )
 from map_spark_sql_spark.operators.text import (
-    language_guess,
     quality_stats,
     rolling_fingerprint,
     token_counts,
@@ -71,7 +70,6 @@ __all__ = [
     "select_token_budget",
     "interval_band_join",
     "interval_overlap_join",
-    "language_guess",
     "quality_stats",
     "rolling_fingerprint",
     "token_counts",

@@ -1061,8 +1061,8 @@ def prefix_filter_pairs(
     # r11 optimization: the prefix table feeds BOTH sides of the posting
     # self-join below. Without its own lineage cut, Catalyst plans the
     # whole explode -> dfreq -> join -> window chain TWICE (one copy per
-    # join input — measured as duplicate operator subtrees 1-20/21-40 in
-    # plans/r11/dedup_prefix_filter_pairs_before.txt); the non-eager
+    # join input — the r11 plan held two identical 20-operator subtrees,
+    # one under each side of the self-join); the non-eager
     # localCheckpoint computes it once and both sides scan the result
     # (guide §2.4: share one exchange between same-keyed consumers).
     # r11 optimization — spread the fan-out (guide §2.5 input skew): the
@@ -1178,7 +1178,8 @@ def prefix_filter_pairs(
     # optimizer inline it into the threshold filter and push BOTH into the
     # second join's condition — array_intersect then runs 2-3x per
     # candidate row (twice inside the join condition, again in the output
-    # projection; plans/r11/dedup_prefix_filter_pairs_before.txt op 56/57).
+    # projection: the r11 plan's BroadcastHashJoin condition called
+    # array_intersect twice and the Project above it a third time).
     # The single-element explode(array(struct(...))) is a Generate barrier:
     # a predicate on a generated field cannot be pushed below the Generate,
     # so the intersect is evaluated exactly once per candidate and the

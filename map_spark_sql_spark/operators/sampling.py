@@ -180,12 +180,13 @@ def pareto_frontier(
     frontier over raw doubles is as noisy as the data).
 
     That assumption is now ENFORCED, not just documented (r11 verdict
-    ask #7): the per-q maxima table is counted before the window runs and
-    a distinct count past ``max_distinct_q`` raises instead of silently
-    sorting a corpus-sized single partition at rung scale. The count is
-    the one driver round-trip this plan retains, and it is not pure
-    overhead: it materializes the (lazily checkpointed) maxima table, so
-    the window reads stored blocks instead of re-running the groupBy.
+    ask #7): a distinct count past ``max_distinct_q`` raises instead of
+    silently sorting a corpus-sized single partition at rung scale. The
+    guard lives in the plan: a 1-row count of the per-q maxima is
+    broadcast-cross-joined onto them and ``raise_error`` fires in the map
+    stage that feeds the window's single-partition exchange, so building
+    the frontier launches no job and the error still comes before the
+    sort it guards against.
 
     ``scored`` (the filtered fact projection) is consumed by both the
     groupBy and the final join; the lazy localCheckpoint computes the
@@ -203,19 +204,25 @@ def pareto_frontier(
         .select(*proj)
         .localCheckpoint(eager=False)
     )
-    g = (
-        scored.groupBy(q_col)
-        .agg(F.max(l_col).alias("_gmax"))
-        .localCheckpoint(eager=False)
-    )
-    n_q = g.count()
-    if n_q > max_distinct_q:
-        raise ValueError(
-            f"pareto_frontier: {q_col} has {n_q} distinct values "
-            f"(> max_distinct_q={max_distinct_q}); the exclusive running "
-            "max would sort them in ONE partition — bucket the criterion "
-            "first (the caller owns the quantization)"
+    maxima = scored.groupBy(q_col).agg(F.max(l_col).alias("_gmax"))
+    n_q = maxima.agg(F.count(F.lit(1)).alias("_nq"))
+    too_many = F.raise_error(
+        F.concat(
+            F.lit(f"pareto_frontier: {q_col} has "),
+            F.col("_nq").cast("string"),
+            F.lit(
+                f" distinct values (> max_distinct_q={max_distinct_q}); the "
+                "exclusive running max would sort them in ONE partition — "
+                "bucket the criterion first (the caller owns the quantization)"
+            ),
         )
+    )
+    g = maxima.crossJoin(F.broadcast(n_q)).select(
+        q_col,
+        F.when(F.col("_nq") > max_distinct_q, too_many)
+        .otherwise(F.col("_gmax"))
+        .alias("_gmax"),
+    )
     w = (
         Window.orderBy(F.col(q_col).desc())
         .rowsBetween(Window.unboundedPreceding, -1)

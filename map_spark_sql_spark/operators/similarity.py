@@ -724,11 +724,10 @@ def knn_graph(
     from pyspark.sql import Window
 
     # r11 optimization: lineage cut before symmetrizing — the union's two
-    # legs otherwise each re-run the whole LSH bucket pipeline (the
-    # before-plan scans the embedding table twice, ops 1/11 in
-    # plans/r11/similarity_knn_graph_before.txt); the lazy checkpoint
-    # computes the pair table once and both legs scan the stored blocks
-    # (guide §2.4: share one computation between same-keyed consumers).
+    # legs otherwise each re-run the whole LSH bucket pipeline (the r11
+    # plan scanned the embedding table twice, once per leg); the lazy
+    # checkpoint computes the pair table once and both legs scan the stored
+    # blocks (guide §2.4: share one computation between same-keyed consumers).
     pairs = cosine_pairs_lsh(
         df, dim=dim, bits=bits, threshold=-1.0, vec_col=vec_col, id_col=id_col
     ).localCheckpoint(eager=False)

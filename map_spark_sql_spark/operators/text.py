@@ -76,12 +76,6 @@ def language_guess_sql(text: str, d: str) -> str:
     return "CASE " + " ".join(conds) + " ELSE 'und' END"
 
 
-def language_guess(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return df.select(
-        F.col(id_col), F.expr(language_guess_sql(text_col, "spark")).alias("lang_guess")
-    )
-
-
 def token_fingerprint_sql(text: str, d: str) -> str:
     """Canonical-form fingerprint: md5 of the sorted distinct token set
     (case-folded) — the classic key-collision fingerprint for clustering
@@ -189,9 +183,10 @@ def tfidf_top_terms(
     )
     # r11 optimization: tf feeds BOTH the document-frequency aggregate and
     # the scored join; without a lineage cut the whole tokenize + (doc,
-    # term) shuffle was planned twice (3 scans of the corpus in
-    # plans/r11/text_tfidf_top_terms_before.txt). The lazy checkpoint
-    # materializes tf once — the reference's CTAS-between-stages shape.
+    # term) shuffle was planned twice (the r11 plan scanned the corpus 3
+    # times; tests/plan_invariants.json pins today's scan count). The lazy
+    # checkpoint materializes tf once — the reference's CTAS-between-stages
+    # shape.
     tf = (
         toks.groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -230,8 +225,9 @@ def bm25_topk(
 
     Scale shape: ONE tokenize pass over the corpus — the r11 rrf plan
     tokenized it three times (tf, docfreq re-deriving tf, and the
-    n_docs/avgdl stats scan each re-planned the Generate subtree; 10
-    parquet scans in plans/r12/retrieval_hybrid_rrf_before.txt). The pass
+    n_docs/avgdl stats scan each re-planned the Generate subtree; that
+    plan had 5 parquet scans, and tests/plan_invariants.json pins
+    today's count). The pass
     emits a SLIM row per document — ``(doc_id, dl, query-term matches)``,
     a few dozen bytes — behind a lazy ``localCheckpoint``, and both the
     corpus stats and the postings read the stored blocks. Document length

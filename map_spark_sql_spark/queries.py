@@ -4048,7 +4048,8 @@ def text_pmi_collocations(spark, sf_dir):
     # r11 optimization: the DataFrame graph referenced `big` twice, `toks`
     # twice, `bcount` twice and `ucount` three times with no lineage cut —
     # Catalyst planned EIGHT scans of documents, each re-splitting the
-    # text (plans/r11/text_pmi_collocations_before.txt). The bigram count
+    # text (the r11 plan had 8 `Scan parquet` nodes; the query's row in
+    # tests/plan_invariants.json holds today's count). The bigram count
     # is checkpointed (vocab-bounded, Zipf-small), and the unigram counts
     # are DERIVED from it instead of re-reading the token stream:
     # count(w at a w1 position) == sum_{w2} n_ab(w, w2) exactly, so only

@@ -2489,8 +2489,8 @@ class TestKcore:
         against the failing set: the plan must carry NO Window operator
         and one LeftAnti join pair per round. (Join strategy stays with
         the planner: the initial plan over unsized lazy-checkpoint leaves
-        defaults to sort-merge; AQE rewrites to broadcast at runtime —
-        plans/r12/similarity_kcore_after.txt shows the broadcast form.)"""
+        defaults to sort-merge; AQE rewrites to broadcast at runtime: at
+        sf0.1 the r12 plan ran all 8 LeftAnti joins as BroadcastHashJoin.)"""
         from map_spark_sql_spark.operators import graph as G
 
         k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
@@ -2556,15 +2556,18 @@ class TestParetoFrontier:
     def test_continuous_criterion_guard_fires(self, spark):
         """A corpus-like distinct count on the criterion must raise (r11
         verdict ask #7) instead of silently sorting all per-q maxima in a
-        single window partition at rung scale."""
+        single window partition at rung scale. The guard is in the plan:
+        it raises when the frontier runs, not when it is built."""
         import pytest
+        from pyspark.errors import SparkRuntimeException
 
         from map_spark_sql_spark.operators.sampling import pareto_frontier
 
         rows = [(i, i, i % 7) for i in range(50)]  # every q distinct
         df = spark.createDataFrame(rows, "doc_id long, q long, l long")
-        with pytest.raises(ValueError, match="distinct"):
-            pareto_frontier(df, "q", "l", "doc_id", max_distinct_q=10)
+        out = pareto_frontier(df, "q", "l", "doc_id", max_distinct_q=10)
+        with pytest.raises(SparkRuntimeException, match="distinct"):
+            out.collect()
         # same data under the default bound still computes
         assert pareto_frontier(df, "q", "l", "doc_id").count() > 0
 

@@ -3,20 +3,10 @@
 from __future__ import annotations
 
 from conftest import SF_DIR
-
-# The benchmark's board queries (perfbench/workloads.py BOARD). Built and
-# materialised once, they compile ~245 distinct classes in a fresh
-# session: more than Spark's default codegen cache of 100 entries.
-BOARD = (
-    "tpch_q1_pricing_summary",
-    "dedup_incremental_near",
-    "similarity_kcore",
-    "customers_er_resolve",
-    "asof_purchase_last_view",
-    "events_funnel_conversion",
-    "docs_bloom_prefilter",
-    "events_profile",
-)
+# Built and materialised once, the benchmark's board queries compile ~245
+# distinct classes in a fresh session: more than Spark's default codegen
+# cache of 100 entries.
+from perfbench.workloads import BOARD
 
 
 def test_generated_classes_compile_once_per_session(spark):
