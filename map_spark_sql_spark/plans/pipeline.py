@@ -404,23 +404,10 @@ _MID_ZOOM_TASK_CAP = 16  # z <= 7; z8 runs at cap + 8 (proven to fit, barely)
 
 
 def _mid_zoom_cap(zoom: int) -> int:
-    """Concurrency cap for 2 < zoom <= _MID_ZOOM, SPARK_GRAFT_MID_ZOOM_TASKS
-    overriding the z<=7 value (z8 always gets +8 over it: the widest rung
-    the 300x box survived at full width had zero free pages left)."""
-    import os
-    import warnings
-
-    base = _MID_ZOOM_TASK_CAP
-    raw = os.environ.get("SPARK_GRAFT_MID_ZOOM_TASKS")
-    if raw is not None:
-        try:
-            base = max(1, int(raw))
-        except ValueError:
-            warnings.warn(
-                f"SPARK_GRAFT_MID_ZOOM_TASKS={raw!r} is not an integer; "
-                f"using the default ({_MID_ZOOM_TASK_CAP})"
-            )
-    return base + 8 if zoom == _MID_ZOOM else base
+    """Concurrency cap for 2 < zoom <= _MID_ZOOM: z8 gets +8 over the z<=7
+    cap (the widest rung the 300x box survived at full width had zero free
+    pages left)."""
+    return _MID_ZOOM_TASK_CAP + 8 if zoom == _MID_ZOOM else _MID_ZOOM_TASK_CAP
 
 
 def collect_tile_pixels(

@@ -171,13 +171,11 @@ def session_windows(
     )
 
 
-SESSION_STATE_SCHEMA = "start_us long, end_us long, n_events long, session_value double"
-# carry_closed_end=True widens state with the LAST CLOSED run's tuple so a
-# late event landing in the silent gap between it and the open run can
-# bridge both (the r10 verdict ask #6 widening)
-SESSION_STATE_CARRY_SCHEMA = (
-    SESSION_STATE_SCHEMA
-    + ", c_start_us long, c_end_us long, c_n_events long, c_session_value double"
+# Per user: the open run, then the LAST CLOSED run, so a late event landing
+# in the silent gap between them can bridge both into one session.
+SESSION_STATE_SCHEMA = (
+    "start_us long, end_us long, n_events long, session_value double, "
+    "c_start_us long, c_end_us long, c_n_events long, c_session_value double"
 )
 SESSION_OUT_SCHEMA = (
     "user_id long, session_start_us long, session_end_us long, "
@@ -185,13 +183,7 @@ SESSION_OUT_SCHEMA = (
 )
 
 
-def custom_sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    close_on_timeout: bool = False,
-    lateness_counter=None,
-    carry_closed_end: bool = False,
-) -> DataFrame:
+def custom_sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Custom stateful sessionization via ``applyInPandasWithState`` — the
     escape hatch for session semantics the built-in ``session_window`` can't
     express (here the logic is deliberately the same gap rule so the batch
@@ -201,65 +193,48 @@ def custom_sessionize(
     Per user, events fold into (start, end, n, value) runs split on
     inactivity > gap; closed sessions emit with ``open=false``, the trailing
     run emits as an ``open=true`` snapshot and is carried in state across
-    micro-batches. State per key is one fixed-width tuple — bounded
-    regardless of event volume, the property that matters at scale.
+    micro-batches together with the LAST closed run. State per key is two
+    fixed-width tuples — bounded regardless of event volume, the property
+    that matters at scale.
+
+    Idle state is never closed by a timeout (``GroupStateTimeout.NoTimeout``):
+    Spark 4.1's timeout-triggered extra micro-batch hits an internal planner
+    NPE (PythonSQLMetrics with a null plan session) under availableNow on
+    local mode, and downstream consumers get the same information from the
+    ``open=true`` snapshot, pinned by ``test_streaming.py::
+    test_sessionize_idle_open_snapshot_reaches_sink``.
 
     Disorder tolerance: rows are sorted by ``ts`` only WITHIN a batch, so a
-    later batch can deliver an event that predates the carried state — the
-    fold keeps the interval as a running min/max, so a late event grows the
-    open session backward/inward. The batch gap-islands equivalence holds
-    exactly when every late event batch-semantically belongs to the still-
-    OPEN run (r9 advice #2 — per-user lateness < gap is necessary but NOT
-    sufficient):
+    later batch can deliver an event that predates the carried state. Each
+    interval is a running min/max, so a late event:
 
-    - an event older than the open run's carried start by MORE than gap
-      mis-merges backward into it (batch semantics would give it an
-      earlier session). This case is detectable from state alone, so it
-      is COUNTED: ``lateness_counter`` (a Spark accumulator; one is
-      created on the driver and exposed as the returned DataFrame's
-      ``lateness_violations`` attribute when not passed) increments per
-      violating event, making a bound-violating feed visible instead of
-      silently wrong. Pinned by ``test_streaming.py::
-      test_sessionize_lateness_violation_counter``.
-    - a late event (even with lateness < gap) landing in the silent gap
-      BETWEEN an already-emitted closed session and the open run merges
-      only into the open run, where the batch twin would BRIDGE both into
-      one session — state no longer remembers the closed predecessor's
-      end, so this divergence is inherent to bounded per-key state and is
-      pinned as documented divergence by ``test_streaming.py::
-      test_sessionize_bridging_event_documented_divergence``. A feed that
-      needs bridging semantics must replay in batch (the gap-islands
-      oracle) or opt into ``carry_closed_end=True`` (below), which widens
-      state to carry the last closed run.
+    - within gap of the open run grows it backward/inward (pinned by
+      ``test_streaming.py::test_sessions_delta_sink_out_of_order_slabs``);
+    - within gap of BOTH the closed run's end and the open run's start
+      bridges all three into one session, re-emitted spanning the
+      superseded closed emission — the read path's overlap-cluster rule in
+      :func:`resolve_session_deltas` keeps the newest (pinned, with the
+      next case, by the ``test_streaming.py::test_sessionize_carry_*``
+      tests);
+    - within gap of only the closed run re-opens and extends it,
+      re-emitting it closed with the grown extent;
+    - more than gap before the carried closed run's start (the open run's,
+      while no run has closed) is a bound violation: batch semantics would
+      give it an earlier session, but bounded state can only merge it into
+      the nearer carried run. It is COUNTED — a Spark accumulator, exposed
+      as the returned DataFrame's ``lateness_violations`` attribute,
+      increments per violating event — so a bound-violating feed is
+      visible instead of silently wrong (pinned by ``test_streaming.py::
+      test_sessionize_lateness_violation_counter`` and
+      ``test_sessionize_carry_violation_still_counted``).
 
-    ``carry_closed_end=True`` (r10 verdict ask #6) keeps the LAST closed
-    run ``(start, end, n, value)`` in state alongside the open run, so:
-
-    - a late event within gap of BOTH the closed run's end and the open
-      run's start bridges all three into one session (re-emitted spanning
-      the superseded closed emission — the read path's overlap-cluster
-      rule in :func:`resolve_session_deltas` keeps the newest);
-    - a late event within gap of only the closed run re-opens and extends
-      it, re-emitting it closed with the grown extent;
-    - the lateness-violation counter now counts only events BEYOND the
-      carried closed run's reach (``t < c_start - gap``), because
-      silent-gap events are handled, not mis-merged.
-
-    ONE level of carry is complete, not an approximation, under the
-    per-user lateness < gap contract: for any older closed run C' (the
-    one before the carried C), C.start - C'.end > gap held when C opened,
-    and every event time the feed can still deliver exceeds
-    ``max_seen - gap >= C.start - gap > C'.end`` — i.e. a compliant feed
-    can never produce an event within gap of any closed run older than
-    the last. State grows by one fixed-width tuple per key; the bound
-    that matters at scale is unchanged. Pinned by ``test_streaming.py::
-    test_sessionize_carry_closed_end_bridges``, which runs the exact slab
-    the divergence test pins and asserts the flag flips the answer to the
-    batch gap-islands result.
-
-    In-bound disorder (late events inside or within gap of the open run's
-    interval, including backward growth) is pinned equivalent by
-    ``test_streaming.py::test_sessions_delta_sink_out_of_order_slabs``.
+    Under the per-user lateness < gap contract the result is the batch
+    gap-islands answer, and ONE level of carry is complete, not an
+    approximation: for any older closed run C' (the one before the carried
+    C), C.start - C'.end > gap held when C opened, and every event time the
+    feed can still deliver exceeds ``max_seen - gap >= C.start - gap >
+    C'.end`` — i.e. a compliant feed can never produce an event within gap
+    of any closed run older than the last.
 
     Precondition on the value fold: after the Arrow transfer ``pd.isna``
     cannot distinguish SQL NULL from a genuine float NaN, so this fold
@@ -268,124 +243,15 @@ def custom_sessionize(
     holds for feeds whose ``value`` column contains no literal NaN (NULLs
     are fine) — true of every fixture and rung corpus here; a feed that
     carries real NaNs must filter them on the built-in path to compare.
-
-    ``close_on_timeout=True`` additionally closes idle state via
-    processing-time timeout once the stream goes quiet. It is off by default
-    because Spark 4.1's timeout-triggered extra micro-batch hits an internal
-    planner NPE (PythonSQLMetrics with a null plan session) under
-    availableNow on local mode; downstream consumers get the same
-    information from the ``open=true`` snapshots.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     gap_us = gap_minutes * 60 * 1_000_000
-    if lateness_counter is None:
-        lateness_counter = events.sparkSession.sparkContext.accumulator(0)
+    violations = events.sparkSession.sparkContext.accumulator(0)
 
     def sessionize(key, pdf_iter, state: GroupState):
         (user_id,) = key
-        if state.hasTimedOut:
-            start, end, n, val = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "session_start_us": start,
-                        "session_end_us": end,
-                        "n_events": n,
-                        "session_value": val,
-                        "open": False,
-                    }
-                ]
-            )
-            return
-
-        rows = pd.concat(list(pdf_iter)).sort_values("ts")
-        ts_us = (rows["ts"].astype("int64") // 1000).tolist()
-        values = rows["value"].tolist()
-
-        start = end = None
-        n, val = 0, None
-        if state.exists:
-            start, end, n, val = state.get
-
-        out = []
-        n_violations = 0
-        for t, v in zip(ts_us, values):
-            if start is not None and t < start - gap_us:
-                # this event predates the carried run by MORE than gap:
-                # batch semantics would put it in an earlier session, but
-                # bounded state can only merge it backward into the open
-                # run — count the mis-merge so the feed's bound violation
-                # is visible (r9 verdict ask #6)
-                n_violations += 1
-            if start is not None and t - end > gap_us:
-                out.append((user_id, start, end, n, val, False))
-                start, end, n, val = None, None, 0, None
-            if start is None:
-                start = t
-            elif t < start:
-                # a late-but-within-gap event from an EARLIER batch can
-                # predate the carried state's start (rows are sorted only
-                # within a batch): the session grows BACKWARD. Plain
-                # ``start = t``-on-open / ``end = t``-on-close kept the
-                # stale extent here — emitting a wrong session_start_us
-                # (r8 verdict nit #1's test surfaced it); the interval is
-                # the running MIN/MAX of event times, not the first/last
-                # processed.
-                start = t
-            n += 1
-            # SQL sum semantics: NULL values (NaN after the Arrow float64
-            # transfer) are SKIPPED, and an all-NULL session sums to NULL —
-            # matching both the built-in session_window's F.sum and the
-            # DuckDB gap-islands oracle. A naive ``val += float(v)`` poisons
-            # the whole session to NaN on one NULL event; the 100x
-            # NULL-injected corpus caught exactly that through the
-            # update-mode snapshot gate (round 7).
-            if not pd.isna(v):
-                val = float(v) if val is None else val + float(v)
-            end = t if end is None or t > end else end
-        if n_violations:
-            lateness_counter.add(n_violations)
-        out.append((user_id, start, end, n, val, True))
-        state.update((start, end, n, val))
-        if close_on_timeout:
-            state.setTimeoutDuration(gap_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id",
-                "session_start_us",
-                "session_end_us",
-                "n_events",
-                "session_value",
-                "open",
-            ],
-        )
-
-    def sessionize_carry(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            start, end, n, val = state.get[:4]
-            # the carried closed run was already emitted closed; only the
-            # open run needs its closing emission
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "session_start_us": start,
-                        "session_end_us": end,
-                        "n_events": n,
-                        "session_value": val,
-                        "open": False,
-                    }
-                ]
-            )
-            return
-
         rows = pd.concat(list(pdf_iter)).sort_values("ts")
         ts_us = (rows["ts"].astype("int64") // 1000).tolist()
         values = rows["value"].tolist()
@@ -432,6 +298,13 @@ def custom_sessionize(
             c_start, c_end, c_n, c_val, c_out_idx = None, None, 0, None, None
 
         for t, v in zip(ts_us, values):
+            # SQL sum semantics: NULL values (NaN after the Arrow float64
+            # transfer) are SKIPPED, and an all-NULL session sums to NULL —
+            # matching both the built-in session_window's F.sum and the
+            # DuckDB gap-islands oracle. A naive ``val += float(v)`` poisons
+            # the whole session to NaN on one NULL event; the 100x
+            # NULL-injected corpus caught exactly that through the
+            # update-mode snapshot gate (round 7).
             v_f = None if pd.isna(v) else float(v)
             if start is not None and t - end > gap_us:
                 out.append((user_id, start, end, n, val, False))
@@ -442,7 +315,9 @@ def custom_sessionize(
                 c_out_idx = len(out) - 1
                 start, end, n, val = None, None, 0, None
             if start is None or t >= start - gap_us:
-                # belongs to the open run (or opens it): running min/max
+                # belongs to the open run (or opens it): running min/max —
+                # a late event from an earlier batch can predate the open
+                # run's start, and the session grows BACKWARD
                 if start is None or t < start:
                     start = t
                 n += 1
@@ -462,9 +337,8 @@ def custom_sessionize(
                     emit_closed((user_id, c_start, c_end, c_n, c_val, False))
             else:
                 # beyond even the carried run's reach: bound violation —
-                # count it, then fall back to the no-carry mis-merge into
-                # whichever run is nearer in time (the carried run when it
-                # exists, else the open run)
+                # count it, then mis-merge it into the nearer run in time
+                # (the carried run when it exists, else the open run)
                 n_violations += 1
                 if c_end is not None:
                     c_start = min(c_start, t)
@@ -476,11 +350,9 @@ def custom_sessionize(
                     n += 1
                     val = merged_val(val, v_f)
         if n_violations:
-            lateness_counter.add(n_violations)
+            violations.add(n_violations)
         out.append((user_id, start, end, n, val, True))
         state.update((start, end, n, val, c_start, c_end, c_n, c_val))
-        if close_on_timeout:
-            state.setTimeoutDuration(gap_minutes * 60 * 1000)
         yield pd.DataFrame(
             [row for row in out if row is not None],
             columns=[
@@ -497,22 +369,15 @@ def custom_sessionize(
         events.select("user_id", "ts", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
-            sessionize_carry if carry_closed_end else sessionize,
+            sessionize,
             outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=(
-                SESSION_STATE_CARRY_SCHEMA if carry_closed_end else SESSION_STATE_SCHEMA
-            ),
+            stateStructType=SESSION_STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if close_on_timeout
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    # the bound-violation metric rides along for callers that didn't pass
-    # their own accumulator (read it after the query drains)
-    out_df.lateness_violations = lateness_counter
+    # the bound-violation metric rides along; read it after the query drains
+    out_df.lateness_violations = violations
     return out_df
 
 
@@ -760,7 +625,6 @@ def sessions_to_snapshot(
     spark: SparkSession,
     snapshot_dir: str,
     gap_minutes: int = 30,
-    carry_closed_end: bool = False,
 ) -> "object":
     """Sessionization in UPDATE output mode via ``foreachBatch`` into a
     DELTA-per-batch parquet snapshot — the at-scale form of the sessions
@@ -794,26 +658,20 @@ def sessions_to_snapshot(
     event-time lateness < gap (an emitted-B interval reaching back to
     overlap closed A would need an event later than A's end was split
     from — lateness > gap by construction; see
-    :func:`custom_sessionize`'s disorder contract for the exact bound and
-    the bridging divergence that lateness < gap does NOT cover), so the
-    LIVE rows are, per user and per overlap-cluster of [start, end]
-    intervals, the emission with the highest ``batch_seq``. :func:`resolve_session_deltas`
+    :func:`custom_sessionize`'s disorder contract for the exact bound), so
+    the LIVE rows are, per user and per overlap-cluster of [start, end]
+    intervals, the emission with the highest ``batch_seq``. A gap-bridging
+    late event re-emits the MERGED session spanning the superseded closed
+    emission, so the same rule resolves it. :func:`resolve_session_deltas`
     computes that declaratively (one window shuffle);
     :func:`compact_sessions_snapshot` folds deltas into a ``base_b{n}``
     dir so read cost stays bounded on long streams.
-
-    ``carry_closed_end`` passes through to :func:`custom_sessionize`: with
-    it on, a gap-bridging late event re-emits the MERGED session spanning
-    the superseded closed emission, and the overlap-cluster/batch_seq rule
-    below resolves the supersession with no read-path change.
 
     Returns the started StreamingQuery (caller awaits termination).
     """
     import os
 
-    sessions = custom_sessionize(
-        stream, gap_minutes=gap_minutes, carry_closed_end=carry_closed_end
-    )
+    sessions = custom_sessionize(stream, gap_minutes=gap_minutes)
     cols = sessions.columns
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
@@ -856,14 +714,11 @@ def resolve_session_deltas(deltas: DataFrame) -> DataFrame:
     overlap cluster is therefore exactly one logical session for
     lateness < gap (pinned by
     ``test_streaming.py::test_sessions_delta_sink_out_of_order_slabs``);
-    a bound-violating feed is counted, and the gap-BRIDGING late event
-    (within bound but batch-semantically merging a closed session with
-    the open one) yields two non-overlapping intervals here where the
-    batch twin has one — unless the sessionizer ran with
-    ``carry_closed_end=True``, in which case the merged re-emission spans
-    the superseded closed one and this same newest-in-cluster rule
-    resolves it; see :func:`custom_sessionize`'s disorder contract and
-    its documented-divergence pin.
+    a bound-violating feed is counted. A gap-BRIDGING late event (within
+    bound, batch-semantically merging a closed session with the open one)
+    re-emits the merged session spanning the superseded closed one, so
+    this same newest-in-cluster rule resolves it; see
+    :func:`custom_sessionize`'s disorder contract.
     One shuffle (by user) total; no join — per-batch state never meets a
     corpus-sized side.
     """

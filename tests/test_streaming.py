@@ -927,61 +927,6 @@ def test_read_sessions_snapshot_refuses_mixed_conventions(spark, tmp_path):
         read_sessions_snapshot(spark, snap_dir)
 
 
-def test_sessionize_bridging_event_documented_divergence(spark, tmp_path):
-    """r9 advice #2: a late event (lateness < gap) landing in the SILENT
-    GAP between an already-emitted closed session and the open run is a
-    documented divergence from the batch twin — state no longer remembers
-    the closed predecessor, so the stream merges the event only into the
-    open run where batch semantics would bridge both into one session.
-    This pins the exact stream-side result (two non-overlapping sessions,
-    both kept by resolve_session_deltas) and asserts it genuinely differs
-    from the batch gap-islands answer, so the divergence can never go
-    silent-and-unnoticed again."""
-    from map_spark_sql_spark.streaming import (
-        read_sessions_snapshot,
-        sessions_to_snapshot,
-    )
-    from map_spark_sql_spark.streaming.events import drain
-
-    t0 = 1_700_000_000_000_000
-    m = 60 * 1_000_000
-    # gap=30m. b0: t0 -> run A. b1: t0+40m (>gap) -> A closes [t0,t0], B
-    # opens. b2: t0+20m, lateness 20m < gap, sits in the silent gap: within
-    # gap of A's end AND of B's start -> batch bridges all three into one.
-    slabs = [
-        [(1, t0, 1.0)],
-        [(1, t0 + 40 * m, 2.0)],
-        [(1, t0 + 20 * m, 4.0)],
-    ]
-    feed = _slab_feed(spark, tmp_path, slabs)
-    snap_dir = str(tmp_path / "bridge_snap")
-    q = sessions_to_snapshot(
-        read_event_stream(spark, feed, nanos=False, max_files_per_trigger=1),
-        spark,
-        snap_dir,
-        gap_minutes=30,
-    )
-    drain(q)
-    got = sorted(
-        map(
-            tuple,
-            read_sessions_snapshot(spark, snap_dir)
-            .select(
-                "user_id", "session_start_us", "session_end_us", "n_events",
-                "session_value",
-            )
-            .collect(),
-        )
-    )
-    stream_want = [
-        (1, t0, t0, 1, 1.0),                       # closed A, never revisited
-        (1, t0 + 20 * m, t0 + 40 * m, 2, 6.0),     # B grew backward only
-    ]
-    batch_want = [(1, t0, t0 + 40 * m, 3, 7.0)]    # gap-islands bridges all
-    assert got == stream_want
-    assert got != batch_want  # the divergence is real, and now documented
-
-
 def test_sessionize_lateness_violation_counter(spark, tmp_path):
     """r9 verdict ask #6: an event older than the open run's carried start
     by MORE than gap silently mis-merges backward — the sessionizer must
@@ -1024,7 +969,7 @@ def test_sessionize_lateness_violation_counter(spark, tmp_path):
     assert run(compliant, "ok") == 0
 
 
-def _snapshot_sessions(spark, tmp_path, slabs, name, carry):
+def _snapshot_sessions(spark, tmp_path, slabs, name):
     from map_spark_sql_spark.streaming import (
         read_sessions_snapshot,
         sessions_to_snapshot,
@@ -1038,7 +983,6 @@ def _snapshot_sessions(spark, tmp_path, slabs, name, carry):
         spark,
         snap_dir,
         gap_minutes=30,
-        carry_closed_end=carry,
     )
     drain(q)
     return sorted(
@@ -1055,12 +999,13 @@ def _snapshot_sessions(spark, tmp_path, slabs, name, carry):
 
 
 def test_sessionize_carry_closed_end_bridges(spark, tmp_path):
-    """r10 verdict ask #6: the EXACT slab the documented-divergence test
-    pins (closed A, open B, then a silent-gap event within gap of both)
-    must produce the batch gap-islands answer once carry_closed_end=True —
-    and keep the pinned divergence with it off. The merged re-emission
-    spans the superseded closed emission, so resolve_session_deltas'
-    newest-in-overlap-cluster rule resolves the supersession unchanged."""
+    """A late event (lateness < gap) landing in the SILENT GAP between an
+    already-emitted closed session A and the open run B, within gap of
+    both: the sessionizer carries A's tuple in state, so the snapshot
+    holds the batch gap-islands answer — one session bridging all three
+    events. The merged re-emission spans the superseded closed emission,
+    so resolve_session_deltas' newest-in-overlap-cluster rule resolves the
+    supersession unchanged."""
     t0 = 1_700_000_000_000_000
     m = 60 * 1_000_000
     slabs = [
@@ -1068,17 +1013,15 @@ def test_sessionize_carry_closed_end_bridges(spark, tmp_path):
         [(1, t0 + 40 * m, 2.0)],
         [(1, t0 + 20 * m, 4.0)],
     ]
+    # gap=30m. b0: t0 -> run A. b1: t0+40m (>gap) -> A closes [t0,t0], B
+    # opens. b2: t0+20m, lateness 20m < gap, sits in the silent gap: within
+    # gap of A's end AND of B's start -> batch bridges all three into one.
     batch_want = [(1, t0, t0 + 40 * m, 3, 7.0)]
-    stream_want = [
-        (1, t0, t0, 1, 1.0),
-        (1, t0 + 20 * m, t0 + 40 * m, 2, 6.0),
-    ]
-    assert _snapshot_sessions(spark, tmp_path, slabs, "carry_on", True) == batch_want
-    assert _snapshot_sessions(spark, tmp_path, slabs, "carry_off", False) == stream_want
+    assert _snapshot_sessions(spark, tmp_path, slabs, "bridge") == batch_want
 
 
 def test_sessionize_carry_extends_closed_without_bridge(spark, tmp_path):
-    """carry_closed_end with silent-gap events that reach the carried
+    """Silent-gap events that reach the carried
     closed run but NOT the open one: the closed run re-opens, absorbs
     both (the second re-emission replacing the first within its batch),
     and is re-emitted closed with the grown extent — matching batch
@@ -1097,7 +1040,7 @@ def test_sessionize_carry_extends_closed_without_bridge(spark, tmp_path):
         (1, t0, t0 + 20 * m, 3, 13.0),
         (1, t0 + 70 * m, t0 + 70 * m, 1, 2.0),
     ]
-    assert _snapshot_sessions(spark, tmp_path, slabs, "extend", True) == want
+    assert _snapshot_sessions(spark, tmp_path, slabs, "extend") == want
 
 
 def test_sessionize_carry_same_batch_reopen_then_bridge(spark, tmp_path):
@@ -1118,12 +1061,12 @@ def test_sessionize_carry_same_batch_reopen_then_bridge(spark, tmp_path):
         [(1, t0 + 20 * m, 4.0), (1, t0 + 45 * m, 8.0)],
     ]
     want = [(1, t0, t0 + 70 * m, 4, 15.0)]
-    assert _snapshot_sessions(spark, tmp_path, slabs, "rebridge", True) == want
+    assert _snapshot_sessions(spark, tmp_path, slabs, "rebridge") == want
 
 
 def test_sessionize_carry_violation_still_counted(spark, tmp_path):
-    """With the carry on, the violation bound moves to the carried closed
-    run's reach: an event more than gap before ITS start is still a
+    """Once a run has closed, the violation bound moves to the carried
+    closed run's reach: an event more than gap before ITS start is still a
     counted mis-merge (absorbed backward into the closed run), while a
     silent-gap event is handled and must NOT count."""
     from map_spark_sql_spark.streaming.events import custom_sessionize, drain
@@ -1136,7 +1079,6 @@ def test_sessionize_carry_violation_still_counted(spark, tmp_path):
         sess = custom_sessionize(
             read_event_stream(spark, feed, nanos=False, max_files_per_trigger=1),
             gap_minutes=30,
-            carry_closed_end=True,
         )
         q = (
             sess.writeStream.format("noop")
@@ -1156,7 +1098,7 @@ def test_sessionize_carry_violation_still_counted(spark, tmp_path):
         [(1, t0, 4.0)],
     ]
     assert run(violating, "viol") == 1
-    # the bridging slab is HANDLED under the carry: zero violations
+    # the bridging slab is HANDLED by the carried closed run: zero violations
     compliant = [
         [(1, t0, 1.0)],
         [(1, t0 + 40 * m, 2.0)],
@@ -1166,10 +1108,10 @@ def test_sessionize_carry_violation_still_counted(spark, tmp_path):
 
 
 def test_sessionize_idle_open_snapshot_reaches_sink(spark, tmp_path):
-    """r9 verdict ask #5a: with close_on_timeout OFF (the shipped default
-    while the Spark 4.1 planner NPE stands), the documented claim is that
-    downstream consumers get the same information from open=true
-    snapshots. Pin it: an idle trailing run — no gap split ever fires —
+    """r9 verdict ask #5a: the sessionizer closes no idle state by timeout
+    (Spark 4.1's timeout-triggered micro-batch hits a planner NPE), and
+    the documented claim is that downstream consumers get the same
+    information from open=true snapshots. Pin it: an idle trailing run — no gap split ever fires —
     must still reach the sink as an open=true emission carrying the full
     interval and aggregate."""
     import os
@@ -1201,48 +1143,3 @@ def test_sessionize_idle_open_snapshot_reaches_sink(spark, tmp_path):
     assert (r.session_start_us, r.session_end_us, r.n_events, r.session_value) == (
         t0, t0 + 5 * m, 2, 4.0,
     )
-
-
-def _spark_41():
-    import pyspark
-
-    return pyspark.__version__.startswith("4.1")
-
-
-import pytest as _pytest
-
-
-@_pytest.mark.xfail(
-    condition=_spark_41(),
-    reason="Spark 4.1 planner NPE: timeout-triggered extra micro-batch "
-    "(PythonSQLMetrics with a null plan session) under availableNow on "
-    "local mode — events.py close_on_timeout contract. STRICT: the day "
-    "this xpasses, the upstream bug is fixed and close_on_timeout can be "
-    "re-enabled.",
-    strict=True,
-)
-def test_sessionize_close_on_timeout_upstream_npe_guard(spark, tmp_path):
-    """r9 verdict ask #5b: version-guarded canary for the documented Spark
-    4.1 planner NPE that keeps close_on_timeout permanently off. On 4.1
-    this must FAIL (xfail strict); on a Spark that fixed the NPE it runs
-    clean and the strict xfail turns it into a loud signal to re-enable
-    the timeout path."""
-    from map_spark_sql_spark.streaming.events import custom_sessionize, drain
-
-    t0 = 1_700_000_000_000_000
-    m = 60 * 1_000_000
-    slabs = [[(1, t0, 1.0)], [(1, t0 + 5 * m, 2.0)]]
-    feed = _slab_feed(spark, tmp_path, slabs)
-    sess = custom_sessionize(
-        read_event_stream(spark, feed, nanos=False, max_files_per_trigger=1),
-        gap_minutes=30,
-        close_on_timeout=True,
-    )
-    q = (
-        sess.writeStream.format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "_to_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q)

@@ -86,12 +86,10 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     # --disorder: re-deliver a deterministic sample of each slab's trailing
     # <gap window as straggler files (contract-compliant lateness — zero
-    # violations — but bridging-capable); --carry: run the sessionizer with
-    # carry_closed_end=True. The A/B at a rung: disorder WITHOUT carry is
-    # expected to FAIL the digest (the pinned bridging divergence, at
-    # scale), disorder WITH carry must PASS it.
+    # violations — but bridging-capable). The sessionizer carries each
+    # user's last closed run, so every straggler bridges exactly as the
+    # batch gap-islands oracle does: with --disorder the digest must PASS.
     disorder = "--disorder" in flags
-    carry = "--carry" in flags
     sf_dir = args[0] if len(args) > 0 else "/root/repo/.scratch/sf1000x"
     n_slabs = int(args[1]) if len(args) > 1 else 12
     n_shards = int(args[2]) if len(args) > 2 else 8
@@ -111,7 +109,7 @@ def main() -> int:
         n_late = bridging_feed(feed)
         print(
             f"injected {n_late} guaranteed-bridging stragglers (compliant "
-            f"lateness, zero expected violations; carry_closed_end={carry})"
+            f"lateness, zero expected violations)"
         )
         if not n_late:
             print("WARNING: no bridging triples found — the A/B is vacuous")
@@ -119,9 +117,7 @@ def main() -> int:
     snap_dir = tempfile.mkdtemp(prefix="sess_scale_snap_")
     stream = STE.read_event_stream(spark, feed, max_files_per_trigger=1)
     t0 = time.perf_counter()
-    query = STE.sessions_to_snapshot(
-        stream, spark, snap_dir, gap_minutes=30, carry_closed_end=carry
-    )
+    query = STE.sessions_to_snapshot(stream, spark, snap_dir, gap_minutes=30)
     STE.drain(query, timeout_sec=14400)
     t_stream = time.perf_counter() - t0
     n_batches = len([p for p in query.recentProgress if p["numInputRows"] > 0])
@@ -177,7 +173,7 @@ def main() -> int:
             f"  shard {shard}/{n_shards}: n={n} (cumulative duckdb {t_duck:.1f}s)"
         )
     ok = (s_n, s_s1, s_s2) == (d_n, d_s1, d_s2)
-    mode = f"disorder={disorder} carry={carry}"
+    mode = f"disorder={disorder}"
     print(
         f"{'PASS' if ok else 'FAIL'} stream_sessions_update_snapshot [{mode}] "
         f"(sharded digest): spark (n={s_n}, s1={s_s1}, s2={s_s2}) vs duckdb-sum "

@@ -65,18 +65,18 @@ def bridging_feed(feed: str, gap_minutes: int = 30) -> int:
 
     Without b the stream closes the a-run when c arrives (c - a > gap)
     and opens at c; b then lands in the silent gap within reach of both —
-    the EXACT bridging case ``carry_closed_end`` exists for, forced
-    deterministically rather than hoped for from random lateness. Batch
-    semantics chain all three into one island, so every delayed b is a
-    guaranteed divergence without the carry and an exact merge with it.
+    the EXACT bridging case the sessionizer's carried closed run is for,
+    forced deterministically rather than hoped for from random lateness.
+    Batch semantics chain all three into one island, and the sessionizer
+    must merge them exactly: the closed a-run is carried in its state, so
+    b bridges it with the open c-run.
 
     The disorder is contract-compliant: when b arrives, the user's open
     run STARTS AT C — no event after c broke the chain (that is what the
     unbroken-suffix condition buys), so the run c opened is still the
     open one — and ``c - b <= gap`` puts b within its reach, with the
     a-run exactly the carried closed run. Zero counted lateness
-    violations, with or without the carry. Returns the number of delayed
-    events."""
+    violations. Returns the number of delayed events."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
