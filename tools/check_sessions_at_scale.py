@@ -112,7 +112,7 @@ def main() -> int:
             f"lateness, zero expected violations)"
         )
         if not n_late:
-            print("WARNING: no bridging triples found — the A/B is vacuous")
+            print("WARNING: no bridging triples found — the check is vacuous")
 
     snap_dir = tempfile.mkdtemp(prefix="sess_scale_snap_")
     stream = STE.read_event_stream(spark, feed, max_files_per_trigger=1)
