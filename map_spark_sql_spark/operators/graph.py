@@ -159,8 +159,9 @@ def pagerank(
     on ``src``, partial-aggregate contributions map-side, final aggregate
     keyed on ``dst`` — plus a left join back onto the vertex table to
     keep rank-sink vertices (no in-edges) at the base value.
-    ``localCheckpoint`` after every round cuts the lineage chain exactly
-    as in :func:`connected_components`. Vertices with no out-edges leak
+    A round references ``ranks`` once, so the plan nests linearly; a lazy
+    lineage cut every 8th round only bounds the plan of deep runs (the
+    loop's comment has the measurement). Vertices with no out-edges leak
     their mass (no dangling redistribution) — fine for centrality
     ranking, and kNN-graph inputs give every vertex out-degree k anyway.
 

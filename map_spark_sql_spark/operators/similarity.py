@@ -151,9 +151,11 @@ def kmeans_fit(
         cent = (
             cent.join(means, "cid", "left")
             .select("cid", F.coalesce("nvec", "cvec").alias("cvec"))
-            # lazy: cuts the per-iteration lineage growth once computed,
-            # without paying an eager k-row materialization job per round
-            # (the next round's broadcast build computes it)
+            # under AQE this lazy cut still runs the round's shuffle
+            # stages at build time (12 build jobs for
+            # similarity_topk_ivf_trained). It stays: a round references
+            # `cent` twice, and that query is ~1.5x slower without it
+            # (sf0.1, 4 cores: 1.50-1.82 s -> 2.38-2.68 s, same rows)
             .localCheckpoint(eager=False)
         )
     return cent
@@ -1921,13 +1923,10 @@ def mmr_rerank(
     the standard diversity pass RAG retrieval stacks run after ANN, so near
     -duplicate hits don't crowd the context window.
 
-    Iterative by nature (each pick changes the penalty of the rest), so the
-    shape follows :func:`kmeans_fit`: a small constant number of chained
-    DataFrame rounds, each round a broadcast of the (<= k-row) selected set
-    against the (<= pool_size-row) localCheckpointed pool, argmax via
-    TakeOrderedAndProject. At 100 TB the ONLY corpus-sized pass is the
-    relevance pool's top-``pool_size`` scan; everything after operates on
-    constant-size relations. Determinism: rel and pairwise sims rounded to
+    One lazy plan: the ONLY corpus-sized pass is the relevance pool's
+    top-``pool_size`` scan; the pool collects into one row and the ``k``
+    picks run as one SQL ``aggregate`` fold over it, which never depends
+    on the collected order. Determinism: rel and pairwise sims rounded to
     6 decimals before any comparison, ties on the lower id; the first pick
     has no selected set, so its penalty term is exactly 0.
 
@@ -1942,48 +1941,43 @@ def mmr_rerank(
         .select(F.col(id_col), F.col(vec_col).alias("v"), rel.alias("rel"))
         .orderBy(F.desc("rel"), F.asc(id_col))
         .limit(pool_size)
-        .localCheckpoint()  # eager: the pool is re-read every round
     )
-    sim = F.round(F.expr(cosine_cols_sql("v", "sv", "spark")), 6)
-    selected = None
-    for step in range(1, k + 1):
-        if selected is None:
-            pick = (
-                pool.orderBy(F.desc("rel"), F.asc(id_col))
-                .limit(1)
-                .select(
-                    F.lit(step).alias("rank"),
-                    F.col(id_col),
-                    "v",
-                    "rel",
-                    (F.lit(lam) * F.col("rel")).alias("mmr_score"),
-                )
-            )
-        else:
-            rem = pool.join(selected.select(id_col), id_col, "left_anti")
-            penalty = (
-                rem.crossJoin(
-                    F.broadcast(selected.select(F.col("v").alias("sv")))
-                )
-                .withColumn("sim", sim)
-                .groupBy(id_col)
-                .agg(F.max("sim").alias("max_sim"))
-            )
-            pick = (
-                rem.join(penalty, id_col)
-                .withColumn(
-                    "mmr_score",
-                    F.lit(lam) * F.col("rel")
-                    - F.lit(1.0 - lam) * F.col("max_sim"),
-                )
-                .orderBy(F.desc("mmr_score"), F.asc(id_col))
-                .limit(1)
-                .select(F.lit(step).alias("rank"), F.col(id_col), "v", "rel", "mmr_score")
-            )
-        selected = pick if selected is None else selected.unionByName(pick)
-        # keep each round's plan flat (the kmeans lineage-cut discipline)
-        selected = selected.localCheckpoint()
-    return selected.select("rank", id_col, F.col("rel").alias("relevance"), "mmr_score")
+    # Fold step i scores every unpicked candidate c against the picks so
+    # far and appends the best: step 1 ranks on rel alone, later steps on
+    # mmr_score, ties on the lower id. Lambda names stay clear of the
+    # a/s/x/y that cosine_cols_sql binds.
+    cid = f"`{id_col}`"
+    w_rel, w_sim = f"CAST({float(lam)!r} AS DOUBLE)", f"CAST({1.0 - lam!r} AS DOUBLE)"
+    sim = f"round({cosine_cols_sql('c.v', 'p.v', 'spark')}, 6)"
+    score = (
+        f"IF(i = 1, {w_rel} * c.rel, "
+        f"{w_rel} * c.rel - {w_sim} * array_max(transform(acc, p -> {sim})))"
+    )
+
+    def pick(rank: str, mmr: str) -> str:
+        return (
+            f"c -> named_struct('rank', {rank}, '{id_col}', c.{cid}, 'v', c.v, "
+            f"'rel', c.rel, 'mmr_score', {mmr})"
+        )
+
+    key = "IF(i = 1, {0}.rel, {0}.mmr_score)".format
+    best_first = (
+        f"(l, r) -> CASE WHEN {key('l')} > {key('r')} THEN -1 "
+        f"WHEN {key('l')} < {key('r')} THEN 1 "
+        f"WHEN l.{cid} < r.{cid} THEN -1 WHEN l.{cid} > r.{cid} THEN 1 ELSE 0 END"
+    )
+    unpicked = f"filter(pool, c -> NOT exists(acc, p -> p.{cid} = c.{cid}))"
+    step = (
+        f"concat(acc, slice(array_sort(transform({unpicked}, {pick('i', score)}), "
+        f"{best_first}), 1, 1))"
+    )
+    no_picks = f"filter(transform(pool, {pick('0', 'c.rel')}), c -> false)"
+    fold = f"aggregate(sequence(1, {int(k)}), {no_picks}, (acc, i) -> {step})"
+    return (
+        pool.agg(F.collect_list(F.struct(id_col, "v", "rel")).alias("pool"))
+        .select(F.inline(F.expr(fold)))
+        .select("rank", id_col, F.col("rel").alias("relevance"), "mmr_score")
+    )
 
 
 def mmr_rerank_oracle(

@@ -2679,9 +2679,9 @@ def similarity_topk_filtered(spark, sf_dir):
 def similarity_mmr_rerank(spark, sf_dir):
     """Maximal Marginal Relevance diversity re-rank over the top-relevance
     pool — the post-ANN diversity pass of RAG stacks. Greedy and inherently
-    iterative, so it runs as k chained constant-size rounds (kmeans
-    discipline: localCheckpoint lineage cuts, broadcast selected set); the
-    oracle unrolls the same loop into a CTE chain."""
+    iterative, so the k picks run as one SQL aggregate fold over the
+    collected pool inside one lazy plan (no build-time job); the oracle
+    unrolls the same loop into a CTE chain."""
     return SIM.mmr_rerank(load_table(spark, sf_dir, "embeddings"))
 
 

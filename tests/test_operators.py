@@ -1812,6 +1812,17 @@ class TestMmrRerank:
         # first pick's penalty term is exactly zero
         assert abs(out[0]["mmr_score"] - 0.5 * out[0]["relevance"]) < 1e-12
 
+    def test_identical_candidates_tie_on_lower_id(self, spark):
+        """Two candidates with identical vectors tie on rel and on penalty:
+        the lower id takes the earlier rank, whatever the input order."""
+        twin = [0.6, 0.8, 0.0]
+        rows = [(9, twin), (0, [1.0, 0.0, 0.0]), (6, twin), (1, [1.0, 0.0, 0.0])]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        for lam in (0.0, 0.5):
+            out = SIM.mmr_rerank(df, k=3, pool_size=4, lam=lam).collect()
+            assert [(r["rank"], r["vec_id"]) for r in out] == [(1, 1), (2, 6), (3, 9)]
+            assert out[1]["relevance"] == out[2]["relevance"] == 0.6
+
 
 class TestTopkFiltered:
     def test_prefilter_excludes_failing_docs(self, spark):

@@ -11,7 +11,11 @@ un-executed physical plan. It checks:
 - on the bench headline and perfbench board queries, the node counts of
   ``_shape``, equal to the table's row;
 - on every query, 0 build jobs, or at most the ``max`` of its
-  ``build_jobs`` entry, which says ``why`` the build runs jobs.
+  ``build_jobs`` entry, which says ``why`` the build runs jobs. A query
+  that starts a stream at build time also counts the micro-batch jobs the
+  stream runs under its own job group (its ``runId``). An entry whose
+  query launches no build job is stale and fails the test, so an entry
+  leaves the table when its cause goes away.
 
 A failure shows the observed rows in the table's layout, so an intended
 plan change is a paste into the table.
@@ -24,6 +28,7 @@ import os
 import re
 
 from conftest import SF_DIR
+from pyspark.sql.streaming import StreamingQueryListener
 
 TABLE = os.path.join(os.path.dirname(__file__), "plan_invariants.json")
 
@@ -50,6 +55,26 @@ def _pitfalls(nodes) -> list[str]:
         if re.search(r"\b(transform|aggregate)\(", filters):
             found.append(f"higher-order function in DataFilters {filters}")
     return found
+
+
+class _RunIds(StreamingQueryListener):
+    """Records the ``runId`` of every stream started; Spark posts the
+    start event synchronously, so it is recorded before ``start()`` returns."""
+
+    def __init__(self):
+        self.run_ids: list[str] = []
+
+    def onQueryStarted(self, event):
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
 
 
 def _dumps(table) -> str:
@@ -82,17 +107,21 @@ def test_plan_invariants(spark, plan_nodes):
     key = "spark.sql.maxMetadataStringLength"
     old = spark.conf.get(key)
     spark.conf.set(key, str(1 << 20))
+    streams = _RunIds()
+    spark.streams.addListener(streams)
     shapes, pitfalls, jobs = {}, {}, {}
     try:
         for name in sorted(QUERIES):
             group = f"plan-invariants-{name}"
+            started = len(streams.run_ids)
             sc.setJobGroup(group, f"build {name}")
             try:
                 df = QUERIES[name](spark, SF_DIR)
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
-            if n := len(sc.statusTracker().getJobIdsForGroup(group)):
+            groups = [group, *streams.run_ids[started:]]
+            if n := sum(len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups):
                 jobs[name] = {"max": n, "why": allow.get(name, {}).get("why", "")}
             nodes = list(plan_nodes(df, execute=False))
             if found := _pitfalls(nodes):
@@ -100,6 +129,7 @@ def test_plan_invariants(spark, plan_nodes):
             if name in shape_names:
                 shapes[name] = _shape(nodes)
     finally:
+        spark.streams.removeListener(streams)
         spark.conf.set(key, old)
 
     # captured: pytest shows it when the test fails
@@ -110,7 +140,9 @@ def test_plan_invariants(spark, plan_nodes):
         if shapes.get(q) != table["shape"].get(q)
     )
     over = {q: v["max"] for q, v in jobs.items() if v["max"] > allow.get(q, {"max": 0})["max"]}
-    assert not (pitfalls or moved or over), (
+    stale = sorted(allow.keys() - jobs.keys())
+    assert not (pitfalls or moved or over or stale), (
         f"pitfalls: {pitfalls}\nshape rows that differ: {moved}\n"
-        f"build jobs over the bound: {over}"
+        f"build jobs over the bound: {over}\n"
+        f"build_jobs entries whose query launches no build job: {stale}"
     )

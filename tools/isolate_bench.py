@@ -1,9 +1,12 @@
 """Isolated repeat-timer for single registry queries (guide §1.1/§1.4).
 
 Runs each named query N times in ONE session and reports every timing
-plus the min (the noise floor on a box with ~19% run-to-run swing), and
-per rep the number of classes codegen compiled (``classes=``): rep 0 is
-the cold run, later reps show what a warm run still compiles. The timed
+plus the min (the noise floor on a box with ~19% run-to-run swing). Per
+rep it also prints the build seconds and the Spark jobs the registry call
+itself launched (``build=``, ``build_jobs=``, counted under a job group
+around the call), so an A/B shows whether build or execution moved, and
+the number of classes codegen compiled (``classes=``): rep 0 is the cold
+run, later reps show what a warm run still compiles. The timed
 action collects the result to the driver; pass --noop to time a
 noop-sink write instead (computes every column, no driver transfer) when
 diagnosing whether collect/driver transfer is the cost. bench.py times
@@ -42,28 +45,37 @@ def main() -> int:
     from map_spark_sql_spark.session import compiled_classes, get_session
 
     spark = get_session(app_name="isolate", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     queries = entrymod.queries()
 
     for name in names:
         fn = queries[name]
-        times = []
-        classes = []
+        times, builds, build_jobs, classes = [], [], [], []
         for i in range(reps):
-            spark.sparkContext.setJobDescription(f"{name} rep{i}")
+            group = f"isolate-build-{name}-{i}"
             c0 = compiled_classes(spark)
             t0 = time.perf_counter()
+            sc.setJobGroup(group, f"{name} rep{i} build")
             df = fn(spark, sf_dir)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            builds.append(time.perf_counter() - t0)
+            build_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            sc.setJobDescription(f"{name} rep{i}")
             if noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.collect()
             times.append(time.perf_counter() - t0)
             classes.append(compiled_classes(spark) - c0)
-        spark.sparkContext.setJobDescription(None)
+        sc.setJobDescription(None)
         print(
             f"{name}: min={min(times):.3f}s runs="
             + ",".join(f"{t:.3f}" for t in times)
+            + " build="
+            + ",".join(f"{t:.3f}" for t in builds)
+            + " build_jobs="
+            + ",".join(str(n) for n in build_jobs)
             + " classes="
             + ",".join(str(c) for c in classes),
             flush=True,
