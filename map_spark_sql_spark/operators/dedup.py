@@ -696,8 +696,11 @@ def simhash_banded_pairs(
         "simhash",
         F.explode(F.expr("array(" + ", ".join(band_structs) + ")")).alias("bd"),
     ).select(id_col, "simhash", "bd.band_id", "bd.band_val")
+    # Same fan-out rule as ngram_jaccard_pairs.
+    par = df.sparkSession.sparkContext.defaultParallelism
     buckets = (
-        bands.groupBy("band_id", "band_val")
+        bands.repartition(par, "band_id", "band_val")
+        .groupBy("band_id", "band_val")
         .agg(
             F.sort_array(
                 F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sig")))
@@ -719,15 +722,8 @@ def simhash_banded_pairs(
         "b -> struct(a.id AS a_id, b.id AS b_id, "
         "bit_count(a.sig ^ b.sig) AS hamming))))"
     )
-    # r11 optimization: same fan-out rule as ngram_jaccard_pairs — the
-    # bucket table is tiny by BYTES, so AQE coalesces it to ~1 partition
-    # and the quadratic in-bucket pair lambda + the distinct's partial agg
-    # would serialize; an explicit repartition-by-num (exempt from
-    # coalescing) spreads the explosion across the cores (guide §2.5).
-    par = df.sparkSession.sparkContext.defaultParallelism
     return (
-        buckets.repartition(par, "band_id", "band_val")
-        .select(F.explode(pairs).alias("p"))
+        buckets.select(F.explode(pairs).alias("p"))
         .select("p.a_id", "p.b_id", "p.hamming")
         .distinct()
     )
@@ -861,8 +857,18 @@ def ngram_jaccard_pairs(
     # max_df cap is the collected posting-list length — one groupBy carries
     # both the cap and the fan-out (a separate document-frequency window pass
     # would re-sort the whole posting table for the same information).
+    #
+    # The fan-out rule of every in-bucket pair builder: the explosion
+    # multiplies rows ~(bucket-1)/2-fold, but the bucket table is tiny by
+    # bytes, so AQE would coalesce a groupBy exchange to ~1 partition and
+    # run the explosion on one task. Repartition by number on the group keys
+    # BEFORE the groupBy: the groupBy reuses that exchange, which AQE does
+    # not coalesce, at every shuffle width. After the groupBy, Spark drops
+    # the repartition whenever the shuffle width equals defaultParallelism.
+    par = df.sparkSession.sparkContext.defaultParallelism
     buckets = (
-        sh.groupBy("h")
+        sh.repartition(par, "h")
+        .groupBy("h")
         .agg(F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("sz").alias("sz")))).alias("ms"))
         .filter((F.size("ms") > 1) & (F.size("ms") <= max_df))
     )
@@ -870,14 +876,8 @@ def ngram_jaccard_pairs(
         "flatten(transform(ms, (a, i) -> "
         "transform(slice(ms, i + 2, size(ms) - i - 1), b -> struct(a.id AS a_id, a.sz AS a_sz, b.id AS b_id, b.sz AS b_sz))))"
     )
-    # The pair fan-out multiplies rows ~(bucket-1)/2-fold, so the stage must
-    # not inherit the *input's* AQE-coalesced partitioning (the bucket table
-    # is tiny by bytes — AQE would collapse it to one task and serialize the
-    # explosion). An explicit repartition-by-num is exempt from coalescing.
-    par = df.sparkSession.sparkContext.defaultParallelism
     shared = (
-        buckets.repartition(par, "h")
-        .select(F.explode(pairs).alias("p"))
+        buckets.select(F.explode(pairs).alias("p"))
         .groupBy("p.a_id", "p.a_sz", "p.b_id", "p.b_sz")
         .agg(F.count(F.lit(1)).alias("shared"))
     )
@@ -916,8 +916,11 @@ def ngram_containment_pairs(
         .select(id_col, "sz", F.explode_outer("hs").alias("h"))
         .filter(F.col("h").isNotNull())
     )
+    # Same fan-out rule as ngram_jaccard_pairs.
+    par = df.sparkSession.sparkContext.defaultParallelism
     buckets = (
-        sh.groupBy("h")
+        sh.repartition(par, "h")
+        .groupBy("h")
         .agg(
             F.sort_array(
                 F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("sz").alias("sz")))
@@ -929,10 +932,8 @@ def ngram_containment_pairs(
         "flatten(transform(ms, (a, i) -> "
         "transform(slice(ms, i + 2, size(ms) - i - 1), b -> struct(a.id AS a_id, a.sz AS a_sz, b.id AS b_id, b.sz AS b_sz))))"
     )
-    par = df.sparkSession.sparkContext.defaultParallelism
     shared = (
-        buckets.repartition(par, "h")
-        .select(F.explode(pairs).alias("p"))
+        buckets.select(F.explode(pairs).alias("p"))
         .groupBy("p.a_id", "p.a_sz", "p.b_id", "p.b_sz")
         .agg(F.count(F.lit(1)).alias("shared"))
     )

@@ -462,9 +462,8 @@ def cosine_pairs_lsh(
     many candidate pairs the cap skipped — the no-silent-caps companion
     every bounded stage owes its callers. Same shape as
     ``dedup.ngram_jaccard_pairs``:
-    join-free in-bucket fan-out from a sorted member list, explicitly
-    repartitioned so the explode stage cannot inherit the input's
-    AQE-coalesced (tiny-by-bytes) partitioning and serialize on one task.
+    join-free in-bucket fan-out from a sorted member list, and its fan-out
+    rule (the bucket key is repartitioned before the groupBy).
     """
     # r11: the L2 norm is a per-MEMBER quantity, but the old plan evaluated
     # it per PAIR (norm_sql over a_vec and b_vec inside the exploded
@@ -480,8 +479,11 @@ def cosine_pairs_lsh(
         F.expr(norm_sql(vec_col, "spark")).alias("nrm"),
         F.expr(lsh_signature_sql(vec_col, dim, bits, "spark")).alias("bucket"),
     )
+    # Same fan-out rule as dedup.ngram_jaccard_pairs.
+    par = df.sparkSession.sparkContext.defaultParallelism
     buckets = (
-        sig.groupBy("bucket")
+        sig.repartition(par, "bucket")
+        .groupBy("bucket")
         .agg(
             F.sort_array(
                 F.collect_list(
@@ -505,10 +507,8 @@ def cosine_pairs_lsh(
         "aggregate(zip_with(a_vec, b_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         "CAST(0 AS DOUBLE), (s, x) -> s + x)"
     )
-    par = df.sparkSession.sparkContext.defaultParallelism
     return (
-        buckets.repartition(par, "bucket")
-        .select(F.explode(pairs).alias("p"))
+        buckets.select(F.explode(pairs).alias("p"))
         .select("p.a_id", "p.b_id", "p.a_vec", "p.b_vec", "p.a_nrm", "p.b_nrm")
         .withColumn("sim", F.round(dot / (F.col("a_nrm") * F.col("b_nrm")), 6))
         .filter(F.col("sim") >= threshold)
@@ -1175,8 +1175,6 @@ def quantized_knn_edges(emb: DataFrame, k: int = 3) -> DataFrame:
     documented sub-10^5-vector rung (the broadcast is dimension-table
     sized there); swap :func:`knn_graph`'s LSH candidates beyond that.
     """
-    from pyspark.sql import Window
-
     import numpy as np
 
     q_expr, _ = _sq8_sql("embedding", "spark")
@@ -1362,14 +1360,8 @@ def quantized_knn_edges_lsh(
         dot = np.take_along_axis(dots, part, axis=1).reshape(-1)
         return pd.DataFrame({"src": src, "dst": dst, "dot": dot})
 
-    # Explicit exchange on the group keys (guide §2.5 fan-out spreading, the
-    # same rule ngram_jaccard_pairs and the banded/prefix dedup paths apply):
-    # the bucket table is tiny by BYTES, so AQE coalesces the groupBy
-    # shuffle to ~1 partition and the quadratic per-bucket GEMM serializes
-    # onto one task (measured: the applyInPandas stage ran (0+1)/1 at
-    # sf0.1). A user repartition on the identical keys is reused by the
-    # groupBy (one exchange, no extra shuffle) and is exempt from AQE
-    # coalescing, so the GEMM spreads across the cluster.
+    # Same fan-out rule as dedup.ngram_jaccard_pairs: without it the
+    # per-bucket GEMM ran on one task (applyInPandas stage (0+1)/1 at sf0.1).
     per_bucket = (
         kept.select("t", "b", "salt", "vec_id", "q")
         .repartition(par, "t", "b", "salt")

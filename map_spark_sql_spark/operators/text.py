@@ -1438,8 +1438,11 @@ def winnowing_pairs(
     (a, b). Output: ``(a_id, b_id, shared_fps)``.
     """
     fps = winnowing_fingerprints(df, k, w, text_col, id_col)
+    # Same fan-out rule as dedup.ngram_jaccard_pairs.
+    par = df.sparkSession.sparkContext.defaultParallelism
     posting = (
-        fps.groupBy("fp")
+        fps.repartition(par, "fp")
+        .groupBy("fp")
         .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
         .filter((F.size("ids") > 1) & (F.size("ids") <= max_df))
     )
@@ -1447,10 +1450,8 @@ def winnowing_pairs(
         "flatten(transform(ids, (a, i) -> "
         "transform(slice(ids, i + 2, size(ids) - i - 1), b -> struct(a, b))))"
     )
-    par = df.sparkSession.sparkContext.defaultParallelism
     return (
-        posting.repartition(par, "fp")
-        .select(F.explode(pairs).alias("p"))
+        posting.select(F.explode(pairs).alias("p"))
         .groupBy(F.col("p.a").alias("a_id"), F.col("p.b").alias("b_id"))
         .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)

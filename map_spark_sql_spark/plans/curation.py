@@ -84,16 +84,15 @@ def curate_corpus(
         exact.select(F.col("keeper").alias(id_col), F.col("copies").alias("exact_copies")),
         id_col,
     )
-    # Stage materialization: kept1 is consumed THREE times downstream (the
-    # MinHash signature pass, the CC vertex set, and the final keeper join).
-    # Without it, each consumer re-runs the lambda-heavy quality gate +
-    # exact-dedup join from the raw scan (measured 3x recompute at sf0.01).
-    # persist() (not localCheckpoint) keeps the lineage so AQE can still
-    # replan each consumer; spill-to-disk storage level is the default, so
-    # at cluster scale this is the standard inter-stage materialization the
-    # reference does with CTAS (SURVEY §2.1 S2/S3) rather than a
-    # memory-only gamble.
-    kept1 = kept1.select(id_col, text_col, "exact_copies").persist()
+    # Stage cut: kept1 is consumed THREE times downstream (the MinHash
+    # signature pass, the CC vertex set, and the final keeper join). Without
+    # a cut, each consumer re-runs the lambda-heavy quality gate + exact-dedup
+    # join from the raw scan. A lazy localCheckpoint computes it once, on
+    # first use, and registers nothing session-wide: persist() put it in the
+    # session's cache, where a later build of the same plan found it, so a
+    # build's job count depended on what had run before it in the session.
+    # It is also faster than no cut (CHANGES.md has the sf0.1 A/B).
+    kept1 = kept1.select(id_col, text_col, "exact_copies").localCheckpoint(eager=False)
 
     # 3. near-dup candidates on the shrunken survivor set (banded LSH)
     pairs = DD.minhash_pairs(kept1, text_col, id_col, threshold=jaccard_threshold)

@@ -119,8 +119,6 @@ def _assert_no_nulls(arr, what: str):
 
 
 def _np_field(struct_arr, name):
-    import numpy as np
-
     field = struct_arr.field(name)
     _assert_no_nulls(field, f"struct field '{name}'")
     return field.to_numpy(zero_copy_only=False)

@@ -51,10 +51,21 @@ def get_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """The session config of the package, its tests and its tools.
+
+    Everything derives from one CPU count: ``SPARK_GRAFT_CPUS`` if set,
+    else the CPUs this process may run on. The master is ``local[cpus]``
+    and ``spark.sql.shuffle.partitions`` is ``cpus``, the rule perfbench
+    applies too, so a test plans what the benchmark runs. ``master`` and
+    ``shuffle_partitions`` remain only for two callers outside the
+    package: ``perfbench/workloads.py`` passes the derived values again,
+    and ``bench.py`` passes a shuffle width of 32.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # AQE replaces the reference's fixed 1200-partition tuning
         # (MapBuilder.java:166-169): coalesce small shuffle partitions,
         # split skewed ones (the "0:0" ALL map key is carried by every row).
@@ -100,8 +111,6 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

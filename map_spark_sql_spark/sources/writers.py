@@ -20,31 +20,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_salted_sorted(
-    df: DataFrame,
-    path: str,
-    salt_col: str = "salt",
-    key_col: str | tuple[str, ...] = "key",
-    num_partitions: int | None = None,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Salt-partitioned, key-sorted parquet write (the HFile-shape sink).
-
-    ``num_partitions`` defaults to the salt cardinality the caller chose
-    (the reference uses ``10^saltDigits`` partitions so each partition maps
-    1:1 onto an HBase region). ``key_col`` may be a tuple for composite sink
-    orders — e.g. ``("mapKey", "zkey")`` with a Z-order key
-    (functions/zorder.py) clusters spatially-adjacent tiles into adjacent
-    file ranges, minimizing range reads for viewport scans.
+def write_salted_sorted(df: DataFrame, path: str, num_partitions: int) -> None:
+    """Salt-partitioned, key-sorted parquet write (the HFile-shape sink):
+    ``df``'s ``salt`` column is hashed into ``num_partitions`` partitions,
+    each sorted by ``key``, overwriting ``path``. ``num_partitions`` is the
+    salt cardinality the caller chose (the reference uses
+    ``10^saltDigits`` partitions so each partition maps 1:1 onto an HBase
+    region), never the session's shuffle width, so the sink layout does not
+    depend on the session config.
     """
-    parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    keys = [key_col] if isinstance(key_col, str) else list(key_col)
-    out = (
-        df.repartition(int(parts), F.col(salt_col))
-        .sortWithinPartitions(*keys)
-        .write.mode(mode)
+    (
+        df.repartition(num_partitions, F.col("salt"))
+        .sortWithinPartitions("key")
+        .write.mode("overwrite")
+        .parquet(path)
     )
-    if partition_by:
-        out = out.partitionBy(*partition_by)
-    out.parquet(path)

@@ -16,11 +16,11 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    """The production session config (the one the bench and the driver
-    use), with a fixed shuffle width for small test inputs."""
+    """The production session config, the one perfbench runs: master and
+    shuffle width both derived from the CPU count (``get_session``)."""
     from map_spark_sql_spark.session import get_session
 
-    s = get_session(app_name="map_spark_sql_spark-tests", shuffle_partitions=8)
+    s = get_session(app_name="map_spark_sql_spark-tests")
     yield s
     s.stop()
 

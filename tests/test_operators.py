@@ -811,6 +811,18 @@ class TestCuration:
             if doc_id in full:
                 assert split == full[doc_id]
 
+    def test_leaves_the_session_cache_empty(self, spark):
+        """The funnel caches nothing session-wide: a cached stage would be
+        reused by the next build of the same plan, so its job count would
+        depend on what ran before it in the session."""
+        from conftest import SF_DIR
+
+        from map_spark_sql_spark.queries import QUERIES
+
+        spark.catalog.clearCache()
+        QUERIES["corpus_curation"](spark, SF_DIR).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
 
 class TestDecontamination:
     def test_flags_exact_ngram_overlap_only(self, spark):

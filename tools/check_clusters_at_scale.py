@@ -129,7 +129,7 @@ def main() -> int:
         "corpus_curation_report",
     }
 
-    spark = get_session(app_name="clusters-at-scale", master="local[32]")
+    spark = get_session(app_name="clusters-at-scale")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

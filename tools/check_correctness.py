@@ -48,7 +48,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = get_session(app_name="correctness", master="local[8]", shuffle_partitions=16)
+    spark = get_session(app_name="correctness")
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events documents embeddings"

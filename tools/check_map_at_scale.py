@@ -221,7 +221,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1000x"
     names = sys.argv[2:] or DEFAULT
 
-    spark = get_session(app_name="map_scale", master="local[8]", shuffle_partitions=64)
+    spark = get_session(app_name="map_scale")
     spark.sparkContext.setLogLevel("ERROR")
     import tempfile
 

@@ -44,9 +44,7 @@ WHERE CAST((vec_id * 1103515245 + t.k) % {n} AS BIGINT) <> vec_id
     t_duck = time.perf_counter() - t0
     print(f"duckdb: {len(drows)} rows in {t_duck:.1f}s", flush=True)
 
-    spark = get_session(
-        app_name="pagerank-scale", master="local[8]", shuffle_partitions=32
-    )
+    spark = get_session(app_name="pagerank-scale")
     from map_spark_sql_spark.sources.readers import load_table
     from pyspark.sql import functions as F
 

@@ -94,9 +94,7 @@ def main() -> int:
     n_slabs = int(args[1]) if len(args) > 1 else 12
     n_shards = int(args[2]) if len(args) > 2 else 8
 
-    spark = get_session(
-        app_name="sessions_scale", master="local[8]", shuffle_partitions=64
-    )
+    spark = get_session(app_name="sessions_scale")
     spark.sparkContext.setLogLevel("ERROR")
     from pyspark.sql import functions as F
 

@@ -52,7 +52,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1000x"
     n_shards = int(sys.argv[2]) if len(sys.argv) > 2 else 16
 
-    spark = get_session(app_name="tokenize_scale", master="local[8]", shuffle_partitions=32)
+    spark = get_session(app_name="tokenize_scale")
     spark.sparkContext.setLogLevel("ERROR")
 
     out_dir = tempfile.mkdtemp(prefix="tokenize_scale_")

@@ -44,7 +44,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from map_spark_sql_spark.session import compiled_classes, get_session
 
-    spark = get_session(app_name="isolate", shuffle_partitions=32)
+    spark = get_session(app_name="isolate")
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     queries = entrymod.queries()

@@ -21,7 +21,8 @@ as ONE job at a scale rung, and records:
 
 Usage: python tools/run_full_build.py [sf_dir] [out_dir] [tiles_threshold]
            [--resume] [--projections=EPSG:3857[,EPSG:4326,...]] [--gates=full|rung]
-Env:   SPARK_GRAFT_CPUS (default 32), SPARK_DRIVER_MEMORY (default 8g).
+Env:   SPARK_GRAFT_CPUS (the session width, see ``get_session``),
+       SPARK_DRIVER_MEMORY (default 8g).
 
 ``--projections`` restricts the build to a CRS subset (r8 verdict ask #1:
 the 1000x rung composes ONE pyramid — a single CRS is the production-regime
@@ -555,7 +556,6 @@ def main() -> int:
     sf_dir = args[0] if len(args) > 0 else "/root/repo/.scratch/sf100x"
     out_dir = args[1] if len(args) > 1 else "/root/repo/.scratch/full_build_100x"
     threshold = int(args[2]) if len(args) > 2 else Q.TILES_THRESHOLD
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     # Registry constants (queries.py) so the existing oracles gate the
     # stage boundaries 1:1. The threshold may be overridden (docstring);
@@ -569,8 +569,6 @@ def main() -> int:
 
     spark = get_session(
         app_name="full_build",
-        master=f"local[{cpus}]",
-        shuffle_partitions=2 * int(cpus),
         # ~68 write actions in one session: bound what the listener retains
         # per action (plan-description strings were the composed run's heap
         # leak before the t1 localCheckpoint fix; these caps are defense in
@@ -797,7 +795,7 @@ def main() -> int:
     receipt = {
         "sf_dir": sf_dir,
         "out_dir": out_dir,
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
         "resume": resume,
         "gates_mode": gates_mode,
         "driver_memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),

@@ -167,7 +167,7 @@ def main() -> int:
     print(f"chopping {src} into {n_slabs} time-ordered slabs ...")
     feed = chop_feed(src, n_slabs)
 
-    spark = get_session(app_name="chop_sweep", master="local[8]", shuffle_partitions=16)
+    spark = get_session(app_name="chop_sweep")
     spark.sparkContext.setLogLevel("ERROR")
     from pyspark.sql import functions as F
 

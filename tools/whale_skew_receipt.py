@@ -96,8 +96,6 @@ def main() -> int:
 
     spark = get_session(
         app_name="whale_skew",
-        master="local[8]",
-        shuffle_partitions=32,
         extra_conf={"spark.ui.enabled": "true", "spark.ui.port": str(UI_PORT)},
     )
     sc = spark.sparkContext
