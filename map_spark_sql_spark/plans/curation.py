@@ -30,7 +30,7 @@ label-propagation loop).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from map_spark_sql_spark.operators import dedup as DD
@@ -78,16 +78,22 @@ def curate_corpus(
     # 1. quality gate — stays a single scan-local predicate
     kept0 = docs.filter(F.expr(_quality_predicate(text_col, "spark", min_tokens)))
 
-    # 2. exact dedup: one hash shuffle; keeper = min id per content digest
-    exact = DD.exact_dedup(kept0, text_col, id_col)  # (content_md5, keeper, copies)
-    kept1 = kept0.join(
-        exact.select(F.col("keeper").alias(id_col), F.col("copies").alias("exact_copies")),
+    # 2. exact dedup: one hash shuffle; keeper = min id per content digest.
+    # A window over the digest keeps each keeper's row in that one shuffle;
+    # aggregating the digests (DD.exact_dedup) and joining the keepers back
+    # onto kept0 needs a second exchange or broadcast, and at sf0.001 one
+    # more build job under the cut below (19 against 16).
+    by_content = Window.partitionBy(DD.content_hash(text_col))
+    kept1 = kept0.select(
         id_col,
-    )
+        text_col,
+        F.count(F.lit(1)).over(by_content).alias("exact_copies"),
+        F.min(id_col).over(by_content).alias("_keeper"),
+    ).filter(F.col(id_col) == F.col("_keeper"))
     # Stage cut: kept1 is consumed THREE times downstream (the MinHash
     # signature pass, the CC vertex set, and the final keeper join). Without
     # a cut, each consumer re-runs the lambda-heavy quality gate + exact-dedup
-    # join from the raw scan. A lazy localCheckpoint computes it once, on
+    # shuffle from the raw scan. A lazy localCheckpoint computes it once, on
     # first use, and registers nothing session-wide: persist() put it in the
     # session's cache, where a later build of the same plan found it, so a
     # build's job count depended on what had run before it in the session.

@@ -59,7 +59,9 @@ def get_session(
     applies too, so a test plans what the benchmark runs. ``master`` and
     ``shuffle_partitions`` remain only for two callers outside the
     package: ``perfbench/workloads.py`` passes the derived values again,
-    and ``bench.py`` passes a shuffle width of 32.
+    and ``bench.py`` passes a shuffle width of 32 but no master, so its
+    master follows the rule above: with ``SPARK_GRAFT_CPUS`` unset it is
+    ``local[<CPUs this process may run on>]``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = (

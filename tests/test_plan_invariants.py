@@ -7,7 +7,9 @@ un-executed physical plan. It checks:
 
 - on every query, the pitfalls: no row-at-a-time ``BatchEvalPython`` node,
   and no higher-order function in a parquet scan's ``DataFilters`` (it
-  cannot be pushed, and runs per row inside the scan);
+  cannot be pushed, and runs per row inside the scan). The walk also
+  covers the plan under every ``localCheckpoint`` the build makes: the
+  built plan shows a cut as ``Scan ExistingRDD``, which hides its scans;
 - on the bench headline and perfbench board queries, the node counts of
   ``_shape``, equal to the table's row;
 - on every query, 0 build jobs, or at most the ``max`` of its
@@ -28,6 +30,7 @@ import os
 import re
 
 from conftest import SF_DIR
+from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.sql.streaming import StreamingQueryListener
 
 TABLE = os.path.join(os.path.dirname(__file__), "plan_invariants.json")
@@ -88,7 +91,7 @@ def _dumps(table) -> str:
     return "{\n" + ",\n".join(parts) + "\n}\n"
 
 
-def test_plan_invariants(spark, plan_nodes):
+def test_plan_invariants(spark, plan_nodes, monkeypatch):
     import bench
     from perfbench.workloads import BOARD
 
@@ -109,6 +112,14 @@ def test_plan_invariants(spark, plan_nodes):
     spark.conf.set(key, str(1 << 20))
     streams = _RunIds()
     spark.streams.addListener(streams)
+    cut_inputs = []
+    cut = DataFrame.localCheckpoint
+
+    def _recording_cut(self, *args, **kwargs):
+        cut_inputs.append(self)
+        return cut(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", _recording_cut)
     shapes, pitfalls, jobs = {}, {}, {}
     try:
         for name in sorted(QUERIES):
@@ -124,7 +135,11 @@ def test_plan_invariants(spark, plan_nodes):
             if n := sum(len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups):
                 jobs[name] = {"max": n, "why": allow.get(name, {}).get("why", "")}
             nodes = list(plan_nodes(df, execute=False))
-            if found := _pitfalls(nodes):
+            found = _pitfalls(nodes)
+            for d in cut_inputs:
+                found += _pitfalls(list(plan_nodes(d, execute=False)))
+            cut_inputs.clear()
+            if found:
                 pitfalls[name] = found
             if name in shape_names:
                 shapes[name] = _shape(nodes)
