@@ -81,8 +81,8 @@ def curate_corpus(
     # 2. exact dedup: one hash shuffle; keeper = min id per content digest.
     # A window over the digest keeps each keeper's row in that one shuffle;
     # aggregating the digests (DD.exact_dedup) and joining the keepers back
-    # onto kept0 needs a second exchange or broadcast, and at sf0.001 one
-    # more build job under the cut below (19 against 16).
+    # onto kept0 needs a second exchange or broadcast, and at sf0.001 three
+    # more build jobs under the cut below (19 against 16).
     by_content = Window.partitionBy(DD.content_hash(text_col))
     kept1 = kept0.select(
         id_col,
