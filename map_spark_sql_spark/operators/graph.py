@@ -19,10 +19,12 @@ Scale notes (the 100 TB story):
   scalar per round) terminates early; a graph whose diameter outruns
   ``max_iter`` (a long chain) raises ``RuntimeError`` instead of
   returning partial labels.
-- ``localCheckpoint`` after every round cuts the lineage chain — without it
-  the logical plan doubles per iteration and planning time, not the data,
-  becomes the bottleneck (on a cluster with HDFS, ``checkpoint`` to durable
-  storage is the restart-safe variant).
+- Both monotone loops, min-label CC and the k-core peel, run on one
+  driver, :func:`_fixpoint`. It owns the per-round lazy ``localCheckpoint``
+  (without it the plan doubles per round and planning, not the data,
+  becomes the bottleneck), the one-aggregate probe that materialises the
+  cut and stops the loop at the fixpoint, and the round bound. PageRank
+  has no probe and cuts every 8th round, so it stays a plain loop.
 
 Reference parity: the reference has no graph operator (SURVEY.md §2.3 — no
 JOIN at all); this is a north-star training-pipeline extension (SURVEY §2.8):
@@ -31,8 +33,36 @@ MinHash/Jaccard pairs -> components -> keep one doc per cluster.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    settled: Callable[[DataFrame], bool],
+    rounds: int,
+    unsettled: str | None = None,
+) -> DataFrame:
+    """Cut, probe, step: the loop of a monotone graph operator.
+
+    Each round cuts ``state`` with a lazy ``localCheckpoint`` and asks
+    ``settled(state)``, one aggregate over the cut that materialises it;
+    the first settled state is returned, else ``state = step(state)``, at
+    most ``rounds`` times. Still unsettled after that, the loop raises
+    ``RuntimeError(unsettled)``, or returns the state when that is None.
+    """
+    for i in range(rounds + 1):
+        state = state.localCheckpoint(eager=False)
+        if settled(state):
+            return state
+        if i < rounds:
+            state = step(state)
+    if unsettled is not None:
+        raise RuntimeError(unsettled)
+    return state
 
 
 def connected_components(
@@ -68,58 +98,41 @@ def connected_components(
     # lazy checkpoint: round 1's probe job materializes the seed labels,
     # so later legs scan the stored blocks instead of recomputing the
     # vertex derivation
-    labels = verts.select("u", F.col("u").alias("label")).localCheckpoint(eager=False)
+    seed = verts.select("u", F.col("u").alias("label")).localCheckpoint(eager=False)
 
-    # r11 optimization: convergence is detected with a monotone sum probe
-    # instead of a per-round join of new-vs-old labels. Every label is
-    # non-increasing round over round (least of own and neighbors'), so the
-    # label sum is non-increasing and stays equal exactly when NO label
-    # changed — one aggregate over the (lazily checkpointed) new label
-    # table replaces a full join + count job per round, and the aggregate
-    # itself materializes the checkpoint. DECIMAL(38,0) keeps the sum
-    # exact for any int64 id multiset.
-    # r11 (2nd pass): the seed label-sum is the vertex-id sum, and the new
-    # label table carries one row per vertex — so round 1's probe can read
-    # BOTH sums (sum(label) for convergence, sum(u) for the seed baseline)
-    # in one aggregate, dropping the separate seed-probe job + its compile.
-    def _label_sum(tbl: DataFrame, with_seed: bool = False):
-        aggs = [F.sum(F.col("label").cast("decimal(38,0)")).alias("s")]
-        if with_seed:
-            aggs.append(F.sum(F.col("u").cast("decimal(38,0)")).alias("su"))
-        return tbl.agg(*aggs).first()
-
-    prev_sum = None
-    for _ in range(max_iter):
-        # r11 optimization: one round = ONE aggregation. The old form
-        # (join sym->labels, groupBy neighbor-min, left-join back onto
-        # labels, coalesce) shuffled the label table twice per round; here
-        # the vertex's own label rides along as a union self-row, so
-        # min(label) over (self-row ∪ neighbor rows) IS the update —
-        # vertices without neighbors keep their label via the self-row,
-        # exactly the old coalesce semantics. Per round: one join + one
-        # groupBy, map-side partial min (guide §2.3 "aggregate before you
-        # shuffle", §2.4 fewer exchanges).
+    # one round = one join + ONE aggregation: the vertex's own label rides
+    # along as a union self-row, so min(label) over (self-row ∪ neighbor
+    # rows) IS the update, and a vertex without neighbors keeps its label
+    # (map-side partial min; guide §2.3 "aggregate before you shuffle").
+    def step(labels: DataFrame) -> DataFrame:
         nbr = sym.join(labels.withColumnRenamed("u", "v"), "v").select("u", "label")
-        new_labels = (
-            labels.unionByName(nbr)
-            .groupBy("u")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)  # materialized by the probe below
-        )
-        row = _label_sum(new_labels, with_seed=prev_sum is None)
-        if prev_sum is None:
-            prev_sum = row["su"]
-        new_sum = row["s"]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge: labels still changed "
-            f"after {max_iter} rounds (max_iter={max_iter}); the graph's "
-            f"diameter exceeds the round bound"
-        )
+        return labels.unionByName(nbr).groupBy("u").agg(F.min("label").alias("label"))
+
+    # every label is non-increasing round over round, so the label sum
+    # stays equal exactly when NO label changed: one aggregate instead of
+    # a new-vs-old join. The seed's sum is the vertex-id sum, which every
+    # label table also carries, so no separate seed probe runs.
+    # DECIMAL(38,0) keeps the sums exact for any int64 id multiset.
+    sums = []
+
+    def unchanged(labels: DataFrame) -> bool:
+        row = labels.agg(
+            F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
+            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
+        ).first()
+        sums.append(row["s"])
+        return row["s"] == (sums[-2] if len(sums) > 1 else row["su"])
+
+    # the seed is never the fixpoint: round 1's labels are the first probed
+    labels = _fixpoint(
+        step(seed),
+        step,
+        unchanged,
+        max_iter - 1,
+        unsettled=f"connected_components did not converge: labels still "
+        f"changed after {max_iter} rounds (max_iter={max_iter}); the graph's "
+        f"diameter exceeds the round bound",
+    )
     return labels.select(F.col("u").alias(id_col), F.col("label").alias("cluster_id"))
 
 
@@ -465,42 +478,24 @@ def kcore(
     — vertices kept only by chains of weak links peel away, cores of
     mutually-similar documents survive.
 
-    ``rounds`` is a FIXED bound, not a convergence test: both this and the
-    oracle run exactly ``rounds`` peel passes, then report the degree of
-    every vertex still meeting the bar, so the two engines agree even on a
-    graph that has not converged (pytest pins convergence on a long chain,
-    where each pass removes only the endpoints — the adversarial case).
+    ``rounds`` is an upper bound with an exit at the fixpoint: the loop
+    (:func:`_fixpoint`) probes each round's failing set (``deg < k``) and
+    stops once it is empty. A peel with an empty failing set changes
+    nothing, so the rows equal those of exactly ``rounds`` passes, the
+    oracle's unrolled chain, converged or not (pytest pins a long chain,
+    where each pass removes only the endpoints: the adversarial case). A
+    k-NN graph with at least k distinct neighbours per vertex is its own
+    k-core, so it runs no pass at all.
 
-    r12 shape: the edge set is SYMMETRIZED once (every undirected edge as
-    two directed rows), so a vertex's degree is one partial-aggregable
-    ``groupBy(s).count()`` per pass — the map side collapses each vertex's
-    rows before the (vertex, count) exchange, so the shuffle carries one
-    tiny row per vertex instead of every edge row, and nothing sorts. The
-    pass then drops edges whose either endpoint FAILED the bar via two
-    left-ANTI joins against the failing set (``deg < k``): on a peeling
-    graph the failing set is far smaller than the surviving set, so the
-    planner broadcasts it (and keeps SMJ freedom when it is not small).
-    Both endpoints' memberships are decided against the same round-start
-    snapshot, so the symmetry invariant holds round to round and the
-    semantics are the exact Batagelj-Zaveršnik round peel. A lazy
-    ``localCheckpoint`` every SECOND pass bounds the plan (between
-    barriers the surviving table is referenced twice per pass — degree +
-    join — so an unbarriered chain re-executes its subtree 2^rounds
-    times: measured 9.7 s with no mid barriers vs 2.2 s with one per two
-    passes at sf0.1).
-
-    History: the r10 form (unordered edge table, union-both-roles degree,
-    two semi joins, checkpoint EVERY pass) measured 3.66 s on the r12 box;
-    the r11 form (two window counts per pass, zero checkpoints — one
-    linear plan) removed the per-pass Catalyst compile that dominated on a
-    slow box but pays two full sort+shuffles of the edge table per pass,
-    and REGRESSED on the driver board (2.46 -> 4.49 s; 3.98 s on the r12
-    box). This form keeps the cheap-compile property (3 bounded compiles
-    for 6 rounds) and replaces every sort with a partial aggregation:
-    min-of-5 isolated 2.24 s vs 3.98 s (window) on the same box, identical
-    rows across all three forms. At scale the per-pass cost is one scan of
-    stored edge blocks + a per-vertex exchange + the anti-join probes — no
-    corpus-sized sort anywhere.
+    The edge set is SYMMETRIZED once, so a vertex's degree is one
+    partial-aggregable ``groupBy(s).count()`` (no sort anywhere), and the
+    probe is that aggregate read through ``isEmpty``, which materialises
+    the round's lazy cut. A pass drops every edge with a failing endpoint
+    by two left-ANTI joins against the failing set, which on a peeling
+    graph is small enough to broadcast; both endpoints are judged against
+    the same round-start snapshot, the exact Batagelj-Zaveršnik round
+    peel. A pass references the surviving table twice (degree + join), so
+    the per-round cut keeps the plan from re-running it 2^rounds times.
 
     Returns ``(id_col, core_degree)`` — vertices of the ``rounds``-peeled
     graph with degree >= k, and that degree.
@@ -513,25 +508,26 @@ def kcore(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    s = (
-        e.select(F.col("u").alias("s"), F.col("v").alias("d"))
-        .union(e.select(F.col("v").alias("s"), F.col("u").alias("d")))
-        .localCheckpoint(eager=False)
+    s = e.select(F.col("u").alias("s"), F.col("v").alias("d")).union(
+        e.select(F.col("v").alias("s"), F.col("u").alias("d"))
     )
-    for i in range(rounds):
-        deg = s.groupBy("s").agg(F.count(F.lit(1)).alias("dg"))
-        bad = deg.filter(F.col("dg") < k).select(F.col("s").alias("x"))
-        s = (
-            s.join(bad.withColumnRenamed("x", "s"), "s", "left_anti")
-            .join(bad.withColumnRenamed("x", "d"), "d", "left_anti")
+
+    def degrees(s: DataFrame) -> DataFrame:
+        return s.groupBy("s").agg(F.count(F.lit(1)).alias("dg"))
+
+    def failing(s: DataFrame) -> DataFrame:
+        return degrees(s).filter(F.col("dg") < k).select("s")
+
+    def peel(s: DataFrame) -> DataFrame:
+        bad = failing(s)
+        return (
+            s.join(bad, "s", "left_anti")
+            .join(bad.withColumnRenamed("s", "d"), "d", "left_anti")
             .select("s", "d")
         )
-        if (i + 1) % 2 == 0 and i != rounds - 1:
-            s = s.localCheckpoint(eager=False)
-    final = s.groupBy("s").agg(F.count(F.lit(1)).alias("dg")).filter(
-        F.col("dg") >= k
-    )
-    return final.select(
+
+    s = _fixpoint(s, peel, lambda s: failing(s).isEmpty(), rounds)
+    return degrees(s).filter(F.col("dg") >= k).select(
         F.col("s").alias(id_col), F.col("dg").cast("bigint").alias("core_degree")
     )
 
@@ -539,10 +535,10 @@ def kcore(
 def kcore_oracle(
     edges_sql: str, k: int = 3, rounds: int = 6, id_col: str = "id"
 ) -> str:
-    """DuckDB twin of :func:`kcore`: the same fixed number of peel passes
-    unrolled into a CTE chain (degree -> survivors -> filtered edges per
-    pass), so the engines agree round-for-round with no convergence
-    assumption."""
+    """DuckDB twin of :func:`kcore`: all ``rounds`` peel passes unrolled
+    into a CTE chain (degree -> survivors -> filtered edges per pass).
+    :func:`kcore` stops early only at its fixpoint, where further passes
+    change nothing, so the engines agree with no convergence assumption."""
     # every CTE is MATERIALIZED: DuckDB inlines plain CTEs, and each peel
     # round references the previous one ~5x (FROM + two IN-subqueries via
     # the degree CTE), so an inlined chain expands 5^rounds copies of the

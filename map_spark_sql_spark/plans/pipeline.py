@@ -534,9 +534,10 @@ def materialize(df: DataFrame, path: str) -> DataFrame:
     write parquet and re-read, cutting lineage so multi-consumer subplans
     (the ingest output feeds stats, the points path, and every
     projection x zoom of the tiles path) are computed once, not once per
-    downstream action."""
+    downstream action. The re-read passes the schema it just wrote, so it
+    launches no schema-inference job."""
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def run_pipeline(

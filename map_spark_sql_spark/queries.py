@@ -4452,13 +4452,14 @@ def text_bpe_pair_merges(spark, sf_dir):
 )
 def similarity_kcore(spark, sf_dir):
     """k-core of the semantic kNN graph (operators/graph.py kcore,
-    Batagelj-Zaveršnik peeling): vertices surviving 6 rounds of drop-if-
-    degree<3, with their core degree. On a near-dup graph the 3-core is
-    the dense duplicate families — chain-linked stragglers (the vertices
-    connected-components gloms onto a cluster through one weak edge) peel
-    off. One partial-aggregable degree agg + two anti-joins against the
-    failing set per round, all keyed on vertex id; fixed round count
-    mirrored exactly by the unrolled-CTE oracle."""
+    Batagelj-Zaveršnik peeling): vertices surviving up to 6 rounds of
+    drop-if-degree<3, with their core degree. On a near-dup graph the
+    3-core is the dense duplicate families — chain-linked stragglers (the
+    vertices connected-components gloms onto a cluster through one weak
+    edge) peel off. On this 3-NN graph every vertex has at least 3
+    distinct neighbours, so the 3-core is every vertex: the first probe
+    finds no failing vertex and no peel pass runs. The unrolled-CTE
+    oracle runs all 6 passes and gives the same rows."""
     emb = load_table(spark, sf_dir, "embeddings")
     edges = SIM.quantized_knn_edges(emb, k=3)
     return G.kcore(edges, k=3, rounds=6, id_col="vec_id")

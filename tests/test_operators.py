@@ -2505,25 +2505,94 @@ class TestKcore:
         got = {r["id"]: r["core_degree"] for r in G.kcore(df, k=2, rounds=2).collect()}
         assert got == {0: 2, 1: 2, 2: 2}
 
-    def test_peel_plan_is_window_free_anti_join(self, spark, plan_nodes):
+    def test_peel_plan_is_window_free_anti_join(self, spark, plan_nodes, monkeypatch):
         """The r12 peel replaces the r11 per-round window counts (two full
         sort+shuffles of the edge table per round — the driver-board
         regression) with a partial-aggregable degree groupBy + anti-joins
         against the failing set: the plan must carry NO Window operator
-        and one LeftAnti join pair per round. (Join strategy stays with
-        the planner: the initial plan over unsized lazy-checkpoint leaves
-        defaults to sort-merge; AQE rewrites to broadcast at runtime: at
-        sf0.1 the r12 plan ran all 8 LeftAnti joins as BroadcastHashJoin.)"""
+        and one LeftAnti join pair per peel pass. Each pass's plan sits
+        under the next round's cut, where the built plan shows only
+        ``Scan ExistingRDD``, so the walk covers every cut's input. (Join
+        strategy stays with the planner: the initial plan over unsized
+        lazy-checkpoint leaves defaults to sort-merge; AQE rewrites to
+        broadcast at runtime.)"""
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        from map_spark_sql_spark.operators import graph as G
+
+        cut_inputs = []
+        cut = DataFrame.localCheckpoint
+
+        def _recording_cut(self, *args, **kwargs):
+            cut_inputs.append(self)
+            return cut(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, "localCheckpoint", _recording_cut)
+        # the 6-chain at k=2 peels its two endpoints in each of 3 passes
+        chain = [(i, i + 1) for i in range(6)]
+        df = G.kcore(spark.createDataFrame(chain, "src long, dst long"), k=2, rounds=3)
+        plans = [list(plan_nodes(d, execute=False)) for d in [*cut_inputs, df]]
+        assert not [n for nodes in plans for n, _ in nodes if n == "Window"]
+        anti = [
+            len([s for n, s in nodes if n.endswith("Join") and "LeftAnti" in s])
+            for nodes in plans
+        ]
+        assert anti == [0, 2, 2, 2, 0], anti  # edge build, 3 passes, result
+
+    @staticmethod
+    def _oracle_rows(edges, k, rounds):
+        import duckdb
+
+        from map_spark_sql_spark.operators import graph as G
+
+        values = ", ".join(f"({a}, {b})" for a, b in edges)
+        con = duckdb.connect()
+        rows = con.execute(
+            G.kcore_oracle(f"SELECT * FROM (VALUES {values}) t(src, dst)", k, rounds)
+        ).fetchall()
+        con.close()
+        return sorted(rows)
+
+    def test_fixpoint_exit_matches_oracle_for_every_round_bound(self, spark):
+        """The peel stops once its failing set is empty; a pass with an
+        empty failing set changes nothing, so every bound gives the rows of
+        the oracle's ``rounds`` unrolled passes: on a graph that settles in
+        pass 2, on one still peeling at the bound, and on one at its
+        fixpoint from the start."""
         from map_spark_sql_spark.operators import graph as G
 
         k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
+        knn3 = [(i, (i + j) % 10) for i in range(10) for j in (1, 2, 3)]
+        graphs = {
+            "k4_tail": (k4 + [(3, 10), (10, 11)], 3),
+            "chain": ([(i, i + 1) for i in range(6)], 2),
+            "knn3": (knn3, 3),
+        }
+        for name, (edges, k) in graphs.items():
+            df = spark.createDataFrame(edges, "src long, dst long")
+            for rounds in range(1, 7):
+                got = sorted(tuple(r) for r in G.kcore(df, k=k, rounds=rounds).collect())
+                assert got == self._oracle_rows(edges, k, rounds), (name, rounds)
+
+    def test_settled_graph_builds_with_the_same_jobs_at_any_bound(self, spark):
+        """K4 at k=3 is its own 3-core, so the first probe ends the loop:
+        a bound of 6 launches no more build jobs than a bound of 1."""
+        from map_spark_sql_spark.operators import graph as G
+
+        sc = spark.sparkContext
+        k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
         df = spark.createDataFrame(k4, "src long, dst long")
-        # walked as built: on K4 with k=3 the failing set is empty, so AQE
-        # removes every anti-join once the plan runs
-        nodes = list(plan_nodes(G.kcore(df, k=3, rounds=4), execute=False))
-        assert not [n for n, _ in nodes if n == "Window"]
-        anti = [s for n, s in nodes if n.endswith("Join") and "LeftAnti" in s]
-        assert len(anti) == 8, anti  # 2 per round x 4 rounds
+        jobs = {}
+        for rounds in (1, 6):
+            group = f"kcore-k4-rounds-{rounds}"
+            sc.setJobGroup(group, group)
+            try:
+                G.kcore(df, k=3, rounds=rounds)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            jobs[rounds] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs[6] == jobs[1], jobs
 
 
 class TestTrailingRangeStats:

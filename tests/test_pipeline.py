@@ -358,6 +358,28 @@ def test_blob_hex_oracle_builders():
     assert got_t == tile_blob.hex()
 
 
+def test_materialize_rereads_without_a_job(occurrence_df, spark, tmp_path):
+    """The barrier's re-read passes the schema it just wrote, so it adds no
+    schema-inference job to the write's, and it reads back the schema a
+    plain read infers."""
+    sc = spark.sparkContext
+    df = P.ingest(occurrence_df, CFG)
+    jobs = {}
+    for group, run in {
+        "plain-write": lambda: df.write.mode("overwrite").parquet(str(tmp_path / "w")),
+        "materialize-write": lambda: P.materialize(df, str(tmp_path / "m")),
+    }.items():
+        sc.setJobGroup(group, group)
+        try:
+            out = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[group] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["materialize-write"] == jobs["plain-write"], jobs
+    assert out.schema == spark.read.parquet(str(tmp_path / "m")).schema
+
+
 def test_config_from_yaml(tmp_path):
     """Parse the reference's YAML layout (example.yml keys); infra keys
     ignored; zoom-16 int-addressing guard enforced."""

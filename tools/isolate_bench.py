@@ -4,9 +4,11 @@ Runs each named query N times in ONE session and reports every timing
 plus the min (the noise floor on a box with ~19% run-to-run swing). Per
 rep it also prints the build seconds and the Spark jobs the registry call
 itself launched (``build=``, ``build_jobs=``, counted under a job group
-around the call), so an A/B shows whether build or execution moved, and
-the number of classes codegen compiled (``classes=``): rep 0 is the cold
-run, later reps show what a warm run still compiles. The timed
+around the call) and the jobs the timed action launched (``exec_jobs=``,
+under a second group), so an A/B shows whether build or execution moved
+and whether jobs moved between them; and the number of classes codegen
+compiled (``classes=``): rep 0 is the cold run, later reps show what a
+warm run still compiles. The timed
 action collects the result to the driver; pass --noop to time a
 noop-sink write instead (computes every column, no driver transfer) when
 diagnosing whether collect/driver transfer is the cost. bench.py times
@@ -51,7 +53,7 @@ def main() -> int:
 
     for name in names:
         fn = queries[name]
-        times, builds, build_jobs, classes = [], [], [], []
+        times, builds, build_jobs, exec_jobs, classes = [], [], [], [], []
         for i in range(reps):
             group = f"isolate-build-{name}-{i}"
             c0 = compiled_classes(spark)
@@ -61,12 +63,16 @@ def main() -> int:
             sc.setLocalProperty("spark.jobGroup.id", None)
             builds.append(time.perf_counter() - t0)
             build_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-            sc.setJobDescription(f"{name} rep{i}")
+            sc.setJobGroup(f"isolate-exec-{name}-{i}", f"{name} rep{i}")
             if noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.collect()
             times.append(time.perf_counter() - t0)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            exec_jobs.append(
+                len(sc.statusTracker().getJobIdsForGroup(f"isolate-exec-{name}-{i}"))
+            )
             classes.append(compiled_classes(spark) - c0)
         sc.setJobDescription(None)
         print(
@@ -76,6 +82,8 @@ def main() -> int:
             + ",".join(f"{t:.3f}" for t in builds)
             + " build_jobs="
             + ",".join(str(n) for n in build_jobs)
+            + " exec_jobs="
+            + ",".join(str(n) for n in exec_jobs)
             + " classes="
             + ",".join(str(c) for c in classes),
             flush=True,
